@@ -52,7 +52,7 @@ HEADLINE = [
     "q100_row_ids",             # contiguous ids, no SinglePartition exchange
     "q101_scd2_merge",          # window-free SCD2 full-outer merge
     "q107_grouped_median",      # grouped histogram-select exact quantiles
-    "q113_possession_sessionize",  # grouped-map state machine (W2/W3)
+    "q113_possession_sessionize",  # possession state machine as windows (W2/W3)
     "q117_pagerank_distributed",  # iterative rank, localCheckpoint sweeps
     "q128_sliding_distinct",    # dedup-then-fan-out rolling distinct
     "q131_doc_chunks",          # zero-shuffle chunk explode

@@ -3,7 +3,7 @@
 A brand-new engine with the query and data-processing capabilities of the
 reference pipeline ``derekcnursey/hoops-edge-database-etl`` (see SURVEY.md),
 rebuilt idiomatically on Spark: DataFrame/SQL declarative plans, Catalyst
-pruning/pushdown, ``applyInPandas`` only for order-dependent stateful scans,
+pruning/pushdown, window functions for order-dependent scans (possessions),
 and a driver-side fixed-point loop for the iterative ratings solver.
 """
 

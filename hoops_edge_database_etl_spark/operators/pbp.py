@@ -9,8 +9,8 @@ build_pbp_team_daily_rollup.py (date-spine densified running totals).
 Re-expressed Spark-first:
 
 - classification is the compiled when-chain (functions.playclass) — JVM-side;
-- ordering + sessionization is the one sanctioned applyInPandas state
-  machine (operators.sessionize), parallel across games;
+- ordering + sessionization is one window pass per game
+  (operators.sessionize), parallel across games;
 - the garbage-time flag (W4) is a pure when() expression;
 - the aggregation pyramid is map-side-combinable groupBy + one self-join;
 - the rollup is date-spine explode + cumulative windows — no driver loops.
@@ -48,8 +48,8 @@ def garbage_time_flag(
 def enrich_plays(plays: DataFrame, patterns=None) -> DataFrame:
     """fct_plays → fct_pbp_plays_enriched: classify (F1), flag garbage time
     (W4), sessionize possessions (W2/W3). Classification and flags are
-    expressions; only the order-dependent possession scan runs in Python,
-    one Arrow batch per game."""
+    expressions; the possession scan is window functions over one shuffle
+    on game_id — no Python in the plan."""
     classified = plays.withColumn(
         "play_kind", compile_classifier("play_text", patterns)
     ).withColumn("garbage_time", garbage_time_flag())

@@ -24,6 +24,8 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hoops_edge_database_etl_spark.session import local_frame
+
 CLAMP_LO, CLAMP_HI = 40.0, 200.0  # efficiency sanity clamp (iterative_ratings.py:25-28)
 
 
@@ -239,7 +241,8 @@ def ratings_per_date(
         for t, (o, d) in sorted(solution.items()):
             out_rows.append((rd, t, round(o, 4), round(d, 4), round(barthag(o, d), 6)))
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "rating_date date, team_id long, adj_oe double, adj_de double, barthag double",
     )

@@ -1,28 +1,21 @@
-"""Order-dependent sessionization (SURVEY.md §2.5 W2/W3).
+"""Order-dependent sessionization (SURVEY.md §2.5 W2/W3), all as window
+functions: one shuffle on the group key, codegen'd, no Python in the plan.
 
-Two tiers, matching §4's conclusion:
+1. ``sessionize_by_gap`` — "new session" depends only on the current and
+   previous row: lag → boundary flag → cumulative sum.
 
-1. ``sessionize_by_gap`` — the scalable declarative form (lag → flag →
-   cumulative sum). Use whenever "new session" depends only on the current
-   and previous row. Pure window functions: one shuffle, codegen'd, no
-   Python in the hot path.
-
-2. ``apply_ordered_state`` / ``possession_sessionize`` — grouped-map
-   ``applyInPandas`` for true state machines where the state transition
-   depends on arbitrary history (the reference's possession logic: a
-   defensive rebound transfers the PENDING offense to the rebounder's team,
-   and an and-1 scans FORWARD for the last free throw —
-   build_pbp_plays_enriched.py:181-276, 143-179). Groups are single games
-   (hundreds of rows), so Python-per-group is cheap and embarrassingly
-   parallel across games; Arrow moves each group in one batch.
+2. ``possession_sessionize`` — the reference's possession state machine
+   (build_pbp_plays_enriched.py:181-276). It looks history-dependent (a
+   defensive rebound hands the PENDING offense to the rebounder's team),
+   but every transition depends on at most two earlier plays, so
+   ``last(…, ignorenulls)`` over the rows before the current one carries
+   the whole state.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
-
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
 
 def sessionize_by_gap(
@@ -52,62 +45,8 @@ def sessionize_by_gap(
     return df.withColumn(session_col, F.sum(new_session).over(cum))
 
 
-def apply_ordered_state(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column | str],
-    state_fn: Callable,
-    output_schema: str,
-) -> DataFrame:
-    """Run an arbitrary order-dependent state machine per group.
-
-    ``state_fn(pdf: pandas.DataFrame) -> pandas.DataFrame`` receives the
-    group's rows ALREADY SORTED by ``order_cols`` and returns the enriched
-    frame matching ``output_schema``. This is the Spark-native replacement
-    for the reference's sort-then-scan loops (SURVEY.md §4: "grouped-map
-    applyInPandas per game").
-
-    Scale: parallelism = number of groups; each group must fit in one
-    executor's memory (true for per-game/per-user groups; NOT for a global
-    scan — that has no distributed answer anywhere).
-    """
-    # Resolve sort keys to plain (name, ascending) pairs HERE, on the driver —
-    # Column objects hold JVM handles and cannot be pickled into the UDF.
-    names: list[str] = []
-    ascending: list[bool] = []
-    for c in order_cols:
-        if isinstance(c, str):
-            names.append(c)
-            ascending.append(True)
-        else:
-            # Column reprs like Column<'x DESC NULLS LAST'> — recover name+dir
-            s = str(c).split("'")[1]
-            names.append(s.split(" ")[0])
-            ascending.append(" DESC" not in s)
-
-    def sorted_fn(pdf):
-        return state_fn(
-            pdf.sort_values(names, ascending=ascending, kind="mergesort").reset_index(
-                drop=True
-            )
-        )
-
-    return df.groupBy(*group_cols).applyInPandas(sorted_fn, schema=output_schema)
-
-
-# ---------------------------------------------------------------------------
-# Possession sessionization — the reference's crown-jewel state machine,
-# re-expressed as a pure-pandas per-group scan (semantics documented against
-# build_pbp_plays_enriched.py:181-276; this is a reimplementation from the
-# survey's spec, not a copy).
-# ---------------------------------------------------------------------------
-
-#: play classification → whether it ends the possession and who gets the ball
-_ENDING_MADE_SHOT = "made_shot"
-_ENDING_TURNOVER = "turnover"
-_ENDING_DEF_REBOUND = "defensive_rebound"
-_ENDING_PERIOD_END = "period_end"
-_ENDING_LAST_FT = "made_last_ft"
+#: kinds after which the next action opens a new possession
+_CLOSERS = ("made_shot", "turnover", "made_last_ft", "defensive_rebound", "period_end")
 
 
 def possession_sessionize(
@@ -119,83 +58,68 @@ def possession_sessionize(
     team_col: str = "team_id",
     kind_col: str = "play_kind",
 ) -> DataFrame:
-    """Assign possession_id / offense_team_id / possession_end per play.
+    """Append possession_id / offense_team_id / possession_end to every play.
 
-    State machine (reference semantics, build_pbp_plays_enriched.py:181-276):
+    Semantics (reference: build_pbp_plays_enriched.py:181-276):
       - plays are ordered (period asc, clock desc, id asc) within a game (W1);
-      - the first action play of a game/period opens a possession credited to
-        its acting team;
-      - a made shot, turnover, made LAST free throw, or period end closes the
-        possession;
-      - a defensive rebound closes the previous possession and the REBOUNDER's
-        team becomes the next offense (the history-dependent part a lag()
-        window cannot express);
-      - the play AFTER a closing event opens the next possession.
+      - an *action* is any play whose kind is neither ``other`` nor
+        ``period_end``; the first action of a game or period opens a
+        possession, credited to its acting team;
+      - a made shot, turnover, made LAST free throw, defensive rebound or
+        period end closes the possession, and the next action opens one;
+      - after a defensive rebound the REBOUNDER's team is the next offense,
+        whoever acts next — unless a period boundary intervenes.
 
-    Input ``kind_col`` must be one of: made_shot, missed_shot, turnover,
+    Window form: the state before a play is read off two earlier plays.
+      - previous event = last non-``other`` play. The play is pending a new
+        possession if there is none, it lies in another period, or it is a
+        closer.
+      - previous action = last action. If it is a defensive rebound in the
+        same period, its team is the pending offense.
+    A play opens a possession if it is an action and pending; possession_id
+    counts openers so far, offense_team_id is the last opener's
+    coalesce(pending offense, own team), and possession_end marks a closer
+    once some possession has an offense.
+
+    Nulls: a null ``kind_col`` is a non-closing action. A null
+    ``period_col`` sorts first (ascending nulls first) and is a period of
+    its own, so the step from it to period 1 is a period boundary. A null
+    ``team_col`` on an opener gives offense_team_id null (and so no
+    possession_end) until the next opener; a defensive rebound with a null
+    team hands the ball to whichever team acts next.
+
+    Input ``kind_col`` is one of: made_shot, missed_shot, turnover,
     defensive_rebound, offensive_rebound, made_last_ft, made_ft, missed_ft,
     period_end, other — produced upstream by the expression-compiled play
     classifier (functions.playclass), mirroring pbp_stats.py:76-110.
     """
-    import pandas as pd  # noqa: F401  (applyInPandas dependency)
+    kind = F.coalesce(F.col(kind_col), F.lit(""))
+    period = F.col(period_col)
+    is_action = ~kind.isin("other", "period_end")
+    w = Window.partitionBy(game_col).orderBy(
+        period.asc(), F.col(clock_col).desc(), F.col(id_col).asc()
+    )
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
+    upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    # preserve EVERY input column; append the three possession columns
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", possession_id long, offense_team_id long, possession_end boolean"
+    def last_before(cond, **fields):
+        row = F.struct(*(c.alias(n) for n, c in fields.items()))
+        return F.last(F.when(cond, row), ignorenulls=True).over(before)
 
-    closing = {_ENDING_MADE_SHOT, _ENDING_TURNOVER, _ENDING_LAST_FT}
-
-    def scan(pdf):
-        poss_id = 0
-        offense = None
-        pending_new = True  # next action play opens a possession
-        pending_offense = None  # set only by a defensive rebound
-        ids, offs, ends = [], [], []
-        prev_period = None
-        for row in pdf.itertuples(index=False):
-            kind = getattr(row, kind_col)
-            team = getattr(row, team_col)
-            period = getattr(row, period_col)
-            if prev_period is not None and period != prev_period:
-                pending_new = True  # period boundary forces possession close
-                pending_offense = None
-            prev_period = period
-
-            if pending_new and kind not in (_ENDING_PERIOD_END, "other"):
-                poss_id += 1
-                # a defensive rebound transferred the pending offense to the
-                # rebounder's team; otherwise the acting team opens
-                offense = pending_offense if pending_offense is not None else team
-                pending_new = False
-                pending_offense = None
-
-            end = False
-            if kind in closing:
-                end = offense is not None
-                pending_new = True
-            elif kind == _ENDING_DEF_REBOUND:
-                # ends the current possession; rebounder's team gets the ball
-                end = offense is not None
-                pending_new = True
-                pending_offense = team
-            elif kind == _ENDING_PERIOD_END:
-                end = offense is not None
-                pending_new = True
-
-            ids.append(poss_id)
-            offs.append(offense)
-            ends.append(bool(end))
-        pdf = pdf.copy()
-        pdf["possession_id"] = ids
-        pdf["offense_team_id"] = offs
-        pdf["possession_end"] = ends
-        return pdf
-
-    return apply_ordered_state(
-        df,
-        [game_col],
-        [F.col(period_col).asc(), F.col(clock_col).desc(), F.col(id_col).asc()],
-        scan,
-        out_schema,
+    event = last_before(kind != "other", p=period, closes=kind.isin(*_CLOSERS))
+    action = last_before(
+        is_action, p=period, dreb=kind == "defensive_rebound", team=F.col(team_col)
+    )
+    pending = event.isNull() | ~event["p"].eqNullSafe(period) | event["closes"]
+    pending_offense = F.when(action["dreb"] & action["p"].eqNullSafe(period), action["team"])
+    # the opener's offense rides in a struct so a null team is carried
+    # forward as null rather than skipped by ignorenulls
+    opener_team = F.coalesce(pending_offense, F.col(team_col)).alias("t")
+    marked = df.withColumn("__opener", F.when(is_action & pending, F.struct(opener_team)))
+    offense = F.last("__opener", ignorenulls=True).over(upto)["t"]
+    return marked.select(
+        *df.columns,
+        F.count("__opener").over(upto).alias("possession_id"),
+        offense.alias("offense_team_id"),
+        (kind.isin(*_CLOSERS) & offense.isNotNull()).alias("possession_end"),
     )

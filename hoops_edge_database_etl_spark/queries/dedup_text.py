@@ -754,6 +754,18 @@ def q84_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 SSJ_T10 = 9  # Jaccard threshold in tenths: 0.9
 
 
+def _xxhash64_injective(vocab: DataFrame) -> bool:
+    """One aggregate over the (vocabulary-bounded) token frame: no two
+    tokens share an xxhash64, and none hashes like the empty-string token
+    that the sets may also hold (``vocab`` filters it out)."""
+    chk = vocab.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct(F.xxhash64("tok")).alias("nh"),
+        F.max((F.xxhash64("tok") == F.xxhash64(F.lit(""))).cast("int")).alias("clash"),
+    ).collect()[0]
+    return chk["n"] == chk["nh"] and chk["clash"] != 1
+
+
 @query(
     "q154_setsim_prefix_join",
     oracle=f"""
@@ -892,31 +904,17 @@ def q154_setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost). Re-encode only the ~4k GROUP sets as sorted xxhash64 LONG
     # arrays: |A∩B| and |A∪B| are invariant under any map that is
     # injective on the vocabulary, and injectivity is CHECKED here at
-    # runtime — one aggregate over the (vocabulary-bounded) dfreq frame,
-    # count(tok) == countDistinct(xxhash64(tok)) — failing loudly on a
-    # collision instead of corrupting a count (none exists on any
+    # runtime (_xxhash64_injective). On a collision the verify falls back
+    # to the exact string sets — slower, never wrong (none exists on any
     # fixture; at 1e9 tokens the birthday bound is ~5%, and the gate is
     # what makes the plan safe to run at that scale). Measured (fresh-JVM
     # A/B x2, scripts/ab_q154_r13.py + OPTIMIZATION_r13.md): median
     # 4.46-5.59 -> 2.43-2.83 s AND spread [3.9, 16.3] -> [2.3, 3.3].
-    # (the sets may also hold the empty-string token, which dfreq filters
-    # out — the same aggregate checks no vocab hash collides with h(""))
-    chk = dfreq.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(F.xxhash64("tok")).alias("nh"),
-        F.max(
-            (F.xxhash64("tok") == F.xxhash64(F.lit(""))).cast("int")
-        ).alias("empty_clash"),
-    ).collect()[0]
-    if chk["n"] != chk["nh"] or chk["empty_clash"] == 1:
-        raise RuntimeError(
-            "xxhash64 collision inside the token vocabulary — the compressed"
-            " verify encoding is invalid for this corpus; widen to exact"
-            " dictionary ids"
-        )
-    enc = gsets.select(
-        "gid", F.sort_array(F.transform("s", lambda t: F.xxhash64(t))).alias("es")
-    )
+    if _xxhash64_injective(dfreq):
+        es = F.sort_array(F.transform("s", lambda t: F.xxhash64(t)))
+    else:
+        es = F.col("s")  # already sorted: s is the group key sk
+    enc = gsets.select("gid", es.alias("es"))
     sa = enc.select(F.col("gid").alias("ga"), F.col("es").alias("sa"))
     sb = enc.select(F.col("gid").alias("gb"), F.col("es").alias("sb"))
     inter = F.size(F.array_intersect("sa", "sb"))

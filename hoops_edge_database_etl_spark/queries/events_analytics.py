@@ -2467,7 +2467,7 @@ def q257_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes, no applyInPandas, no iteration (this is the fixed-boundary
     cap semantics CDNs/analytics warehouses use; the drifting-boundary
     variant where each sub-session restarts the clock IS order-recursive
-    and lives in operators/sessionize.py's state machine). Every
+    and needs a stateful per-user scan). Every
     sub-session provably spans ≤ 24h (test). Integer seconds end to
     end via floored epoch microseconds (the q254 rule)."""
     ev = load(spark, sf_dir, "events")
@@ -4153,7 +4153,7 @@ def q330_lru_stack_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     event stream against an LRU of capacity {LRU_CACHE_K} and report
     hit rates. The Spark side runs a REAL LRU (an ordered-dict state
     machine in applyInPandas — §2.9's sanctioned grouped-map pattern,
-    one partition-local pass per user like q113's possession machine);
+    one partition-local pass per user);
     the oracle computes MATTSON STACK DISTANCES declaratively (an
     access hits a size-k LRU iff fewer than k distinct other items
     appeared since its previous access). The two formulations are

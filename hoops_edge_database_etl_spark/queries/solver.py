@@ -15,6 +15,7 @@ from pyspark.sql.types import (
 )
 
 from hoops_edge_database_etl_spark.queries import query
+from hoops_edge_database_etl_spark.session import local_frame
 from hoops_edge_database_etl_spark.tables import load
 
 
@@ -277,9 +278,7 @@ def q61_jacobi_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for t in teams
     ]
-    return spark.createDataFrame(
-        rows, "team_id long, off_adj double, def_adj double"
-    )
+    return local_frame(spark, rows, "team_id long, off_adj double, def_adj double")
 
 
 @query(

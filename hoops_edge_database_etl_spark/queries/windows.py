@@ -658,19 +658,21 @@ def q113_possession_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The survey's crown-jewel state machine (W2/W3) under the hard oracle
     gate (VERDICT r3 item 2): a deterministic synthetic play stream derived
     arithmetically from lineitem (500 games, two teams each, 12-way play
-    vocabulary) runs through operators.sessionize.possession_sessionize —
-    the grouped-map applyInPandas scan whose defensive-rebound offense
-    transfer and period-boundary close are history-dependent in a way no
-    lag() window expresses (reference: build_pbp_plays_enriched.py:181-276).
-    The DuckDB oracle replays the IDENTICAL transition function as a
+    vocabulary) runs through operators.sessionize.possession_sessionize.
+    Its defensive-rebound offense transfer and period-boundary close look
+    history-dependent (reference: build_pbp_plays_enriched.py:181-276), but
+    each transition reads at most two earlier plays — the last non-`other`
+    play and the last action — so the scan is one window pass of
+    last(…, ignorenulls) over the preceding rows plus running count/last.
+    The DuckDB oracle replays the transition function itself as a
     recursive CTE advancing one play per game per step (depth = max plays
     per game, ~130 at sf0.01; every game advances in parallel within a
     step), so possession ids, offense attribution, and end flags are
     hash-compared play-by-play — not just possession counts.
 
-    Scale: parallelism = games (bounded groups, hundreds of rows each);
-    one shuffle on game_id, Arrow-batched per group. The recursive CTE is
-    the ORACLE ONLY — the Spark plan has no iteration."""
+    Scale: parallelism = games; one shuffle on game_id, then codegen'd
+    window operators, no Python. The recursive CTE is the ORACLE ONLY —
+    the Spark plan has no iteration."""
     from hoops_edge_database_etl_spark.operators.sessionize import (
         possession_sessionize,
     )

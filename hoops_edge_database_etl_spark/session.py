@@ -10,8 +10,9 @@ core count rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -57,3 +58,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A small driver-built DataFrame, shipped to the JVM as one Arrow table.
+
+    Same contract as ``spark.createDataFrame(rows, ddl)``, but the plan is a
+    ``LocalTableScan``: a Python list would be pickled through a Python RDD,
+    which forks a Python worker per core just to read a few rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    return spark.createDataFrame(table)

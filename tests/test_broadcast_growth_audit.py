@@ -236,7 +236,6 @@ def test_detector_on_synthetic_plans():
     assert broadcast_heads(cart) == []
 
 
-@pytest.mark.slow
 @pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
 def test_no_unadjudicated_forced_broadcast(spark):
     from audit_broadcast_growth import (

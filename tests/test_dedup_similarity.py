@@ -245,6 +245,36 @@ def test_prefix_join_is_lossless_vs_bruteforce(spark):
     assert sub_got == want
 
 
+@pytest.mark.parametrize("collision", [False, True])
+def test_q154_both_verify_encodings_match_oracle(spark, duck, monkeypatch, collision):
+    """q154 verifies candidates on xxhash64 long arrays when the hash is
+    injective on the vocabulary, else on the exact string sets. Forcing the
+    gate false takes the fallback; both branches match the oracle."""
+    from hoops_edge_database_etl_spark.queries import dedup_text
+
+    real = dedup_text._xxhash64_injective
+    seen = []
+
+    def gate(vocab):
+        seen.append(real(vocab))
+        return seen[-1] and not collision
+
+    monkeypatch.setattr(dedup_text, "_xxhash64_injective", gate)
+    compare_query(spark, duck, "q154_setsim_prefix_join")
+    assert seen == [True]  # the fixture has no real collision
+
+
+def test_xxhash64_gate_detects_clashes(spark):
+    from hoops_edge_database_etl_spark.queries.dedup_text import _xxhash64_injective
+
+    def vocab(*toks):
+        return spark.createDataFrame([(t,) for t in toks], "tok string")
+
+    assert _xxhash64_injective(vocab("a", "b"))
+    assert not _xxhash64_injective(vocab("a", "a"))  # two rows, one hash
+    assert not _xxhash64_injective(vocab("a", ""))  # hashes like the empty token
+
+
 def test_kmeans_lloyd_partition_of_corpus(spark):
     """Every vector lands in exactly one cluster: per-dimension assigned
     counts sum to the corpus size, and updated coordinates stay in the

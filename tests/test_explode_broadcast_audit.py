@@ -107,7 +107,6 @@ def test_aggregate_branch_first_generate_deeper_sibling():
     assert len(hits) == 1 and "Generate" in hits[0]
 
 
-@pytest.mark.slow
 @pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
 def test_no_unadjudicated_explode_broadcast(spark):
     from audit_explode_broadcast import flags_in_plan

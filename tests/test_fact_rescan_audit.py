@@ -115,7 +115,6 @@ def test_detector_on_synthetic_plans():
     assert flags_for(five) == {"lineitem": 5}
 
 
-@pytest.mark.slow
 @pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
 def test_no_unadjudicated_fact_rescans(spark):
     from audit_fact_rescan import fact_scan_counts

@@ -135,7 +135,6 @@ def test_detector_on_synthetic_plans():
     assert global_window_heads(agg_between) == []
 
 
-@pytest.mark.slow
 @pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
 def test_no_unadjudicated_global_window(spark):
     from audit_global_window import global_window_heads

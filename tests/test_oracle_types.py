@@ -106,7 +106,6 @@ _SPARK_EQUIV = {
 }
 
 
-@pytest.mark.slow
 @pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
 def test_cross_engine_column_types_agree(spark, oracle_types):
     """Analysis-only sweep (no query executes): every oracle output

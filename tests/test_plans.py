@@ -78,7 +78,6 @@ _PYTHON_ALLOWED = {
     "q63_ann_ivf",  # IVF cell-probe: broadcast codebook + per-cell GEMM
     "q48_knn_brute_force",  # broadcast query matrix × corpus-stream GEMM
     # §2.9 sanctions grouped-map state machines & kernels explicitly:
-    "q113_possession_sessionize",  # the W2/W3 applyInPandas state machine
     "q115_skew_kernel_salted",  # pandas-kernel agg: the salted two-phase form
     "q116_skew_kernel_unsalted",  # …and its single-task control
     "q119_pareto_frontier",  # local-skyline mapInPandas + bounded merge
@@ -131,6 +130,39 @@ def test_no_python_in_analytic_plans(spark):
         ):
             offenders.append(name)
     assert not offenders, f"Python leaked into: {offenders}"
+
+
+def test_possession_scan_is_one_jvm_window_pass(spark):
+    """enrich_plays sessionizes possessions without Python: window operators
+    over exactly one shuffle on game_id."""
+    from hoops_edge_database_etl_spark.operators.pbp import enrich_plays
+    from tests.test_pbp import SCHEMA, _plays
+
+    plan = _executed(enrich_plays(spark.createDataFrame(_plays(), SCHEMA)))
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+    assert plan.count("Exchange hashpartitioning(game_id") == 1, plan
+
+
+def test_driver_built_frames_are_local_scans(spark):
+    """ratings_per_date and q61 ship their driver-side results as Arrow:
+    a LocalTableScan, not a pickled Python RDD (ExistingRDD)."""
+    import datetime
+
+    from hoops_edge_database_etl_spark.operators.ratings import ratings_per_date
+
+    d = datetime.date
+    games = spark.createDataFrame(
+        [(d(2024, 1, 1), 1, 2, 110.0, True), (d(2024, 1, 1), 2, 1, 95.0, False)],
+        "game_date date, team_id long, opp_id long, off_eff double, is_home boolean",
+    )
+    frames = {
+        "ratings_per_date": ratings_per_date(spark, games, rating_dates=[d(2024, 1, 2)]),
+        "q61": _qs()["q61_jacobi_exact"](spark, SF_DIR),
+    }
+    for name, df in frames.items():
+        plan = _executed(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
 
 
 def test_first_last_single_shuffle(spark):
