@@ -114,19 +114,17 @@ def resolve_aliases(df: DataFrame, spec: TableSpec) -> DataFrame:
     """Materialize each aliased target as the first-present candidate
     (coalesce), dropping consumed candidates — replicates
     ``pydict_get_first`` + the camelCase-duplicate drop
-    (orchestrate.py:1119-1127)."""
-    out = df
+    (orchestrate.py:1119-1127). A resolved target moves to the end of the
+    column list; the whole rewrite is one projection."""
+    cols: dict[str, Column] = {c: F.col(c) for c in df.columns}
     for target, candidates in spec.aliases.items():
-        present = [c for c in candidates if c in out.columns]
-        if target in out.columns:
+        present = [c for c in candidates if c in cols]
+        if target in cols:
             present = [target] + [c for c in present if c != target]
         if not present:
             continue
-        out = out.withColumn(f"__alias_{target}", F.coalesce(*[F.col(c) for c in present]))
-        drop = [c for c in present if c != target]
-        out = out.drop(*([target] if target in out.columns else []), *drop)
-        out = out.withColumnRenamed(f"__alias_{target}", target)
-    return out
+        cols[target] = F.coalesce(*[cols.pop(c) for c in present]).alias(target)
+    return df.select(*cols.values())
 
 
 def conform(df: DataFrame, spec: TableSpec, keep_extra: bool = False) -> DataFrame:

@@ -120,27 +120,19 @@ def game_team_stats(enriched: DataFrame, include_garbage: bool = True) -> DataFr
         return F.when(d > 0, n / d).otherwise(F.lit(0.0))
 
     minutes = 40 + 5 * (F.greatest(F.col("max_period"), F.lit(2)) - 2)
-    return (
-        joined.withColumn("efg_pct", safe(F.col("fgm") + 0.0, F.col("fga")))
-        .withColumn(
-            "ts_pct",
-            safe(F.col("pts"), 2 * (F.col("fga") + 0.44 * F.col("fta"))),
-        )
-        .withColumn("ft_rate", safe(F.col("fta") + 0.0, F.col("fga")))
-        .withColumn(
-            "oreb_pct", safe(F.col("oreb") + 0.0, F.col("oreb") + F.col("opp_dreb"))
-        )
-        .withColumn("off_eff", safe(100 * F.col("pts"), F.col("poss_formula")))
-        .withColumn("def_eff", safe(100 * F.col("opp_pts"), F.col("opp_poss_formula")))
-        .withColumn("game_minutes", minutes)
-        .withColumn(
-            "pace",
-            safe(
-                (F.col("poss_formula") + F.col("opp_poss_formula")) / 2 * 40,
-                minutes.cast("double"),
-            ),
-        )
-    )
+    return joined.withColumns({
+        "efg_pct": safe(F.col("fgm") + 0.0, F.col("fga")),
+        "ts_pct": safe(F.col("pts"), 2 * (F.col("fga") + 0.44 * F.col("fta"))),
+        "ft_rate": safe(F.col("fta") + 0.0, F.col("fga")),
+        "oreb_pct": safe(F.col("oreb") + 0.0, F.col("oreb") + F.col("opp_dreb")),
+        "off_eff": safe(100 * F.col("pts"), F.col("poss_formula")),
+        "def_eff": safe(100 * F.col("opp_pts"), F.col("opp_poss_formula")),
+        "game_minutes": minutes,
+        "pace": safe(
+            (F.col("poss_formula") + F.col("opp_poss_formula")) / 2 * 40,
+            minutes.cast("double"),
+        ),
+    })
 
 
 def team_daily_rollup(gts: DataFrame, stat_cols: list[str] | None = None) -> DataFrame:

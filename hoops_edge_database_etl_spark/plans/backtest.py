@@ -23,7 +23,11 @@ def attach_ratings(
     away_points) ⋈ ratings(team_id, rating_date, adj_oe, adj_de) — most
     recent rating STRICTLY before the game date per side (J8: no leakage),
     then the Pomeroy margin (backtest_spreads.py:235-246):
-    ((h_oe·a_de − a_oe·h_de)/avg) · pace/100 + hca."""
+    ((h_oe·a_de − a_oe·h_de)/avg) · pace/100 + hca.
+
+    The result is lazily checkpointed: a backtest reads it twice
+    (``backtest_metrics`` and ``roi_by_threshold``), and without the
+    checkpoint each read would re-run both as-of window passes."""
     home = asof_join(
         games.withColumnRenamed("home_team_id", "team_id"),
         ratings,
@@ -60,6 +64,7 @@ def attach_ratings(
             F.col("predicted_margin").isNotNull()
             & ~F.isnan("predicted_margin")
         )
+        .localCheckpoint(eager=False)
     )
 
 

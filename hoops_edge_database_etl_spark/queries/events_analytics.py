@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hoops_edge_database_etl_spark.queries import query
+from hoops_edge_database_etl_spark.session import local_frame
 from hoops_edge_database_etl_spark.tables import load
 
 
@@ -3634,7 +3635,7 @@ def q313_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     conv = per_user.groupBy("mask").agg(
         F.sum("converted").cast("long").alias("n_conv")
     )
-    subsets = spark.createDataFrame([(s,) for s in range(8)], "s int")
+    subsets = local_frame(spark, [(s,) for s in range(8)], "s int")
     v = (
         subsets.join(
             F.broadcast(conv), F.expr("(mask & s) = mask"), "left"
@@ -3642,9 +3643,7 @@ def q313_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s")
         .agg(F.coalesce(F.sum("n_conv"), F.lit(0)).cast("long").alias("val"))
     )
-    terms = spark.createDataFrame(
-        _SHAP_TERMS, "channel string, bit int, s int, w int"
-    )
+    terms = local_frame(spark, _SHAP_TERMS, "channel string, bit int, s int, w int")
     vs = v.select(F.col("s").alias("s0"), F.col("val").alias("v_without"))
     vc = v.select(F.col("s").alias("s1"), F.col("val").alias("v_with"))
     return (

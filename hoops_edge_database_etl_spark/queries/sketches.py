@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hoops_edge_database_etl_spark.queries import query
+from hoops_edge_database_etl_spark.session import local_frame
 from hoops_edge_database_etl_spark.tables import load
 
 KMV_K = 64
@@ -377,7 +378,7 @@ def q93_exact_quantile_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_cum = hist.withColumn("cum", F.sum("cnt").over(wb))
     t = s.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     k = (
-        spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "quantile double")
+        local_frame(spark, [(0.5,), (0.9,), (0.99,)], "quantile double")
         .crossJoin(F.broadcast(t))
         .withColumn(
             "kk", F.ceil(F.col("quantile") * F.col("n").cast("double")).cast("long")

@@ -684,7 +684,7 @@ def q135_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    seeds = spark.createDataFrame([(int(s), 0) for s in BFS_SEEDS], "node long, hops long")
+    seeds = local_frame(spark, [(int(s), 0) for s in BFS_SEEDS], "node long, hops long")
     visited = seeds.localCheckpoint(eager=True)
     frontier = visited
     for hop in range(1, BFS_MAX_HOPS + 1):
@@ -761,8 +761,8 @@ def q300_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    dist = spark.createDataFrame(
-        [(int(SSSP_SOURCE), 0)], "node long, dist long"
+    dist = local_frame(
+        spark, [(int(SSSP_SOURCE), 0)], "node long, dist long"
     ).localCheckpoint(eager=True)
     # r13 (the q410 probe trick, measured −10–20% in
     # scripts/ab_iterlazy_r13.py): distances only ever DECREASE and nodes
