@@ -7108,7 +7108,8 @@ def q459_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity holds exactly under this encoding. Scale: ranking within
     a group is the classic sort-per-key window; groups here are the
     3-value returnflag enum (each reducer owns one). Round-12 plan
-    (guide §2.3/§2.4, measured in scripts/ab_q459d_r12.py): the
+    (guide §2.3/§2.4, measured in ab_q459d_r12.py, deleted; in git
+    history at 953e8f3): the
     LOW-CARDINALITY side (l_quantity, 50 distinct × 3 flags = 150
     cells) takes its doubled midranks from a value histogram —
     cum-sum over 150 rows, re-attached by a 150-row broadcast — so

@@ -306,7 +306,8 @@ def q62_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     → keep one canonical doc per component. cluster_id = min doc_id in the
     component; every document appears (singletons cluster with themselves).
 
-    Iterative min-label propagation as a driver loop of DataFrame sweeps:
+    Iterative min-label propagation via
+    :func:`~hoops_edge_database_etl_spark.operators.cc.connected_components_labelprop`:
     each sweep is join(labels, edges) + groupBy-min — pure integer min, so
     the unique fixed point is engine-exact and a DuckDB recursive CTE
     hash-checks it. Convergence is monitored with sum(lbl), an integer
@@ -316,43 +317,22 @@ def q62_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup graph the candidate-pair set is ≪ the corpus, so the
     iterative state is |V_active| + |E| rows, not |corpus|; untouched
     documents are singleton clusters by construction and bypass the loop
-    entirely (left join at the end). Each sweep shuffles hash-partitioned
-    on node; ``localCheckpoint`` truncates lineage so sweep N's plan does
-    not re-derive sweeps 1..N-1 (without it, planning cost grows
-    per-sweep). Near-dup components are small (bounded by band collision
-    rate), so iterations ≈ component diameter (single digits); for
-    adversarial graph shapes swap in alternating large-star/small-star
-    contraction — same per-sweep plan, provably O(log n) sweeps."""
-    edges = q43_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    und = edges.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    entirely (left join at the end). Near-dup components are small
+    (bounded by band collision rate), so iterations ≈ component diameter
+    (single digits); for adversarial graph shapes q412 swaps in
+    star contraction, provably O(log n) sweeps."""
+    from hoops_edge_database_etl_spark.operators.cc import (
+        connected_components_labelprop,
     )
-    und = und.localCheckpoint(eager=True)  # materialize once, flat lineage
-    # active subgraph: only nodes that appear in an edge can ever change.
-    # Initialization fuses the first sweep: starting from identity labels,
-    # sweep 1 would compute min(self, direct neighbors) — so start there
-    # and save one full shuffle round + convergence check.
-    labels = und.groupBy("src").agg(
-        F.least(F.first("src"), F.min("dst")).alias("lbl")
-    ).select(F.col("src").alias("node"), "lbl")
 
-    prev_sum = None
-    for _ in range(30):
-        labels = labels.localCheckpoint(eager=True)
-        cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-        prop = und.join(labels, und["dst"] == labels["node"]).select(
-            F.col("src").alias("node"), F.col("lbl")
-        )
-        labels = (
-            labels.unionByName(prop).groupBy("node").agg(F.min("lbl").alias("lbl"))
-        )
-    else:  # pragma: no cover - 30 sweeps ≫ any realistic dedup diameter
-        raise RuntimeError("label propagation did not converge in 30 sweeps")
+    edges = q43_minhash_lsh(spark, sf_dir).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    # back to `lbl`: the optimizer then drops the rename, so q69's and
+    # q450's soak-pinned plans (which embed this one) stay as they were
+    labels = connected_components_labelprop(edges).select(
+        "node", F.col("component").alias("lbl")
+    )
 
     d = load(spark, sf_dir, "documents")
     # singletons (no incident edge) cluster with themselves — no loop cost
@@ -908,7 +888,8 @@ def q154_setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the exact string sets — slower, never wrong (none exists on any
     # fixture; at 1e9 tokens the birthday bound is ~5%, and the gate is
     # what makes the plan safe to run at that scale). Measured (fresh-JVM
-    # A/B x2, scripts/ab_q154_r13.py + OPTIMIZATION_r13.md): median
+    # A/B x2, ab_q154_r13.py, deleted; in git history at 953e8f3; and
+    # OPTIMIZATION_r13.md): median
     # 4.46-5.59 -> 2.43-2.83 s AND spread [3.9, 16.3] -> [2.3, 3.3].
     if _xxhash64_injective(dfreq):
         es = F.sort_array(F.transform("s", lambda t: F.xxhash64(t)))

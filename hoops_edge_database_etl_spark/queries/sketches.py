@@ -1454,7 +1454,8 @@ def q232_sketch_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two consumers do NOT share a canonical subtree and AQE stage
     # reuse cannot fire. Forcing one scan with a localCheckpoint was
     # measured SLOWER (same-session interleaved A/B, 5 reps at sf0.1,
-    # scripts/ab_q459_q232_r12.py: no-ckpt 1.44 s [1.31, 2.97] vs
+    # ab_q459_q232_r12.py, deleted; in git history at 953e8f3: no-ckpt
+    # 1.44 s [1.31, 2.97] vs
     # lazy-ckpt 2.14 s [1.72, 3.30] vs the r11 two-scan plan 1.80 s
     # [1.50, 2.35]) — and the daily key rollup dedups only ~0.80 of the
     # events rows (measured scale-invariant: 0.804 at sf0.01, 0.807 at

@@ -5,7 +5,7 @@ non-SQL-expressible, SURVEY.md §2.5 W10/W11) and the normalize layer
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -14,6 +14,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hoops_edge_database_etl_spark.operators.fixpoint import until_stable
 from hoops_edge_database_etl_spark.queries import query
 from hoops_edge_database_etl_spark.session import local_frame
 from hoops_edge_database_etl_spark.tables import load
@@ -475,6 +476,20 @@ _PR_ORACLE = f"""
     """
 
 
+def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted (src, dst, w) matchup graph q94, q117 and q453 rank."""
+    o = load(spark, sf_dir, "orders")
+    return (
+        o.select(
+            (F.col("o_custkey") % 20).cast("long").alias("src"),
+            (F.col("o_orderkey") % 20).cast("long").alias("dst"),
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
 @query("q94_pagerank_exact", oracle=_PR_ORACLE)
 def q94_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the team matchup graph (damping 0.85, {_PR_ITERS}
@@ -491,16 +506,7 @@ def q94_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by league size at any SF. For web-scale graphs use q62's
     distributed-iteration shape (active-subgraph joins +
     localCheckpoint) with the same integer arithmetic."""
-    o = load(spark, sf_dir, "orders")
-    e = (
-        o.select(
-            (F.col("o_custkey") % 20).cast("long").alias("src"),
-            (F.col("o_orderkey") % 20).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    e = _pr_edges(spark, sf_dir)
     rows = e.collect()  # ≤ teams² rows at any SF
     outw: dict[int, int] = {}
     for r in rows:
@@ -534,38 +540,44 @@ def q117_pagerank_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q94 is the right plan when nodes fit on the driver (league-sized
     graphs); THIS is the plan when they don't. Same bits either way."""
-    o = load(spark, sf_dir, "orders")
-    e = (
-        o.select(
-            (F.col("o_custkey") % 20).cast("long").alias("src"),
-            (F.col("o_orderkey") % 20).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
+    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), F.lit(True))
+    return pr.select(
+        F.col("node").alias("team_id"),
+        (F.col("pr").cast("double") / _PR_SCALE).alias("pagerank"),
     )
+
+
+def _pagerank_sweeps(e: DataFrame, teleport: Column) -> DataFrame:
+    """q94's sweeps as DataFrames: (node, pr) after ``_PR_ITERS`` sweeps
+    over the (src, dst, w) edges. ``teleport`` is a boolean Column over
+    ``node`` marking the restart set: the initial vector puts
+    ``_PR_SCALE`` units on it and each sweep adds the 15% restart mass to
+    it. ``F.lit(True)`` is uniform restart (q117); the optimizer folds it
+    away, leaving q117's plans as they were before the sweep was shared."""
     od = e.groupBy("src").agg(F.sum("w").alias("outw"))
     # edge matrix + out-weights are reused every sweep: checkpoint once
     ew = e.join(od, "src").localCheckpoint(eager=True)
     base = (15 * _PR_SCALE) // 100
-    pr = od.select(
-        F.col("src").alias("node"), F.lit(_PR_SCALE).cast("long").alias("pr")
-    ).localCheckpoint(eager=True)
+    pr = (
+        od.select(F.col("src").alias("node"))
+        .withColumn("pr", F.when(teleport, _PR_SCALE).otherwise(0).cast("long"))
+        .localCheckpoint(eager=True)
+    )
     for _ in range(_PR_ITERS):
         contrib = ew.join(pr, ew.src == pr.node).select(
             F.col("dst"),
             F.expr("pr * w div outw").alias("c"),  # ints >= 0: div == floor
         )
         pr = (
-            contrib.groupBy("dst")
-            .agg((F.lit(base) + F.expr("85 * sum(c) div 100")).alias("pr"))
-            .select(F.col("dst").alias("node"), "pr")
+            contrib.groupBy(F.col("dst").alias("node"))
+            .agg(F.expr("85 * sum(c) div 100").alias("flow"))
+            .select(
+                "node",
+                (F.when(teleport, base).otherwise(0) + F.col("flow")).alias("pr"),
+            )
             .localCheckpoint(eager=True)
         )
-    return pr.select(
-        F.col("node").alias("team_id"),
-        (F.col("pr").cast("double") / _PR_SCALE).alias("pagerank"),
-    )
+    return pr
 
 
 @query(
@@ -733,12 +745,13 @@ def q300_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer weights (1 + (31·src + dst) mod 9): each sweep relaxes
     every edge by joining the current distance table against the edge
     list on src, min-merging candidates into the running distances,
-    and localCheckpointing to keep lineage O(1); the loop exits when a
-    sweep improves nothing — detected by a two-scalar monotone
-    (count, sum) probe (r13; never a data collect), which also
-    materializes the sweep's lazy checkpoint in the same job.
-    Weights >= 1 guarantee monotone convergence in <=
-    diameter sweeps. The DuckDB oracle enumerates all walks of total
+    and localCheckpointing to keep lineage O(1); ``until_stable`` exits
+    when a sweep improves nothing, detected by a two-scalar monotone
+    (count, sum) probe that also materializes the sweep's lazy
+    checkpoint in the same job. Weights >= 1 guarantee monotone
+    convergence in <= diameter sweeps; hitting the sweep cap
+    (SSSP_MAX_SWEEPS) raises RuntimeError rather than return partly
+    relaxed distances. The DuckDB oracle enumerates all walks of total
     weight <= {SSSP_DIST_CAP} via a recursive CTE with SET semantics
     (the cap bounds recursion on cycles) + MIN — the exact fixed point
     Bellman-Ford reaches; both sides report only dist <= cap so the
@@ -764,38 +777,50 @@ def q300_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = local_frame(
         spark, [(int(SSSP_SOURCE), 0)], "node long, dist long"
     ).localCheckpoint(eager=True)
-    # r13 (the q410 probe trick, measured −10–20% in
-    # scripts/ab_iterlazy_r13.py): distances only ever DECREASE and nodes
-    # are only ever ADDED, so (count, sum(dist)) changes iff some
-    # relaxation improved something — the per-sweep improved-JOIN +
-    # isEmpty probe (an extra join job per sweep) is replaced by a
-    # two-scalar monotone aggregate that ALSO materializes the lazy
-    # checkpoint in the same job. Stopping sweep is identical (exact-row
-    # parity pinned in the A/B script).
-    prev = None
-    for _ in range(SSSP_MAX_SWEEPS):
+
+    def relax(dist: DataFrame) -> DataFrame:
         cand = (
             e.join(dist.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
             .filter(F.col("dist") <= SSSP_DIST_CAP)
         )
-        merged = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        probe = tuple(merged.agg(F.count(F.lit(1)), F.sum("dist")).collect()[0])
-        dist = merged
-        if probe == prev:
-            break
-        prev = probe
+        return dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    # distances only fall and nodes are only added, so (count, sum) is a
+    # monotone probe — no per-sweep improved-join (r13: −10–20% on q300
+    # in ab_iterlazy_r13.py, deleted; in git history at 953e8f3)
+    probe = (F.count(F.lit(1)), F.sum("dist"))
+    dist = until_stable(dist, relax, probe, SSSP_MAX_SWEEPS, "q300 Bellman-Ford")
     return dist.filter(F.col("dist") <= SSSP_DIST_CAP).select(
         F.col("node").cast("bigint"), F.col("dist").cast("bigint")
     )
 
 
 DAG_MAX_SWEEPS = 24
+
+
+def _max_relax(edges: DataFrame, start_nodes: DataFrame) -> DataFrame:
+    """Longest path INTO every node of a DAG: (node, d) with d = the
+    length of the longest edge chain ending at node, every start node
+    seeded at 0. Each sweep joins the edges (on src) to the current
+    table and max-merges; d only rises over a fixed node set, so
+    (count, sum(d)) is a monotone probe. On a cyclic input d grows
+    without bound, so the sweep cap doubles as a cycle tripwire: it
+    raises RuntimeError after DAG_MAX_SWEEPS sweeps."""
+    lvl = start_nodes.withColumn("d", F.lit(0).cast("long")).localCheckpoint(
+        eager=True
+    )
+
+    def sweep(lvl: DataFrame) -> DataFrame:
+        cand = edges.join(lvl.withColumnRenamed("node", "src"), "src").select(
+            F.col("dst").alias("node"), (F.col("d") + 1).alias("d")
+        )
+        return lvl.unionByName(cand).groupBy("node").agg(F.max("d").alias("d"))
+
+    probe = (F.count(F.lit(1)), F.sum("d"))
+    return until_stable(
+        lvl, sweep, probe, DAG_MAX_SWEEPS, "DAG longest-path relaxation"
+    )
 
 
 @query(
@@ -827,8 +852,8 @@ def q318_dag_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge list is a DAG (edges only run >= 7 ids forward, orienting q135's graph with a
     bounded chain length; on a
     cyclic graph longest-path is NP-hard and the sweep would diverge,
-    so the loop's sweep cap doubles as a cycle tripwire: hitting it
-    without convergence means the input wasn't a DAG — asserted).
+    so ``_max_relax``'s sweep cap doubles as a cycle tripwire: hitting
+    it raises RuntimeError).
     Distributed: each sweep joins edges (shuffled on src once) to the
     current wave table and max-merges; sweeps needed = critical path
     length, frontier-bounded like q135. The DuckDB oracle seeds every
@@ -843,35 +868,10 @@ def q318_dag_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    lvl = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .withColumn("wave", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+    nodes = e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
+    return _max_relax(e, nodes).select(
+        F.col("node").cast("bigint"), F.col("d").cast("bigint").alias("wave")
     )
-    converged = False
-    for _ in range(DAG_MAX_SWEEPS):
-        cand = (
-            e.join(lvl.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), (F.col("wave") + 1).alias("wave"))
-        )
-        merged = (
-            lvl.unionByName(cand)
-            .groupBy("node")
-            .agg(F.max("wave").alias("wave"))
-            .localCheckpoint(eager=True)
-        )
-        improved = merged.join(
-            lvl.withColumnRenamed("wave", "old"), "node"
-        ).filter(F.col("wave") > F.col("old"))
-        done = improved.isEmpty()
-        lvl = merged
-        if done:
-            converged = True
-            break
-    assert converged, "sweep cap hit: edge input is not a DAG"
-    return lvl.select(F.col("node").cast("bigint"), F.col("wave").cast("bigint"))
 
 
 MODULARITY_COMM_DIV = 10  # community(node) = node DIV 10
@@ -1030,10 +1030,11 @@ def q346_dag_slack(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole pipeline, CP_len − (longest chain INTO it + longest chain
     OUT of it). Slack-0 tasks ARE the critical path — the list an
     on-call engineer reads when the nightly run is late; high-slack
-    tasks are where you steal capacity. Two MAX-relax passes (q318's
-    sweep, run once forward and once on the REVERSED edge list — same
-    distributed shape, edges re-keyed on dst) meet in one node-sized
-    join; the oracle mirrors with two recursive closures. Property-
+    tasks are where you steal capacity. Two ``_max_relax`` passes
+    (q318's sweep, run once forward and once on the REVERSED edge list
+    — same distributed shape, edges re-keyed on dst) meet in one
+    node-sized join; either raises RuntimeError at the sweep cap on a
+    cyclic input. The oracle mirrors with two recursive closures. Property-
     tested: slack >= 0 everywhere, at least one slack-0 chain of
     length CP exists, and slack is edge-consistent (an edge's slack
     can't exceed its endpoints')."""
@@ -1046,36 +1047,10 @@ def q346_dag_slack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
-    )
-
-    def max_relax(edges, start_nodes):
-        lvl = start_nodes.withColumn("d", F.lit(0).cast("long")).localCheckpoint(
-            eager=True
-        )
-        for _ in range(DAG_MAX_SWEEPS):
-            cand = edges.join(
-                lvl.withColumnRenamed("node", "src"), "src"
-            ).select(F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
-            merged = (
-                lvl.unionByName(cand)
-                .groupBy("node")
-                .agg(F.max("d").alias("d"))
-                .localCheckpoint(eager=True)
-            )
-            improved = merged.join(
-                lvl.withColumnRenamed("d", "old"), "node"
-            ).filter(F.col("d") > F.col("old"))
-            done = improved.isEmpty()
-            lvl = merged
-            if done:
-                return lvl
-        raise AssertionError("sweep cap hit: edge input is not a DAG")
-
-    fwd = max_relax(e, nodes).withColumnRenamed("d", "fwd_d")
+    nodes = e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
+    fwd = _max_relax(e, nodes).withColumnRenamed("d", "fwd_d")
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    bwd = max_relax(rev, nodes).withColumnRenamed("d", "bwd_d")
+    bwd = _max_relax(rev, nodes).withColumnRenamed("d", "bwd_d")
     j = fwd.join(bwd, "node")
     cp = j.agg(F.max(F.col("fwd_d") + F.col("bwd_d")).alias("cp_len"))
     return j.crossJoin(F.broadcast(cp)).select(
@@ -1865,8 +1840,8 @@ def q429_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a sweep whose frontier died on the unprobed sweep appends an
         # EMPTY fragment (zero rows, zero contribution) and the next
         # probe reads 0 and exits: the (node, first-reached-sweep) set
-        # is unchanged (exact-parity A/B in scripts/ab_q429_r13.py;
-        # 5.01 -> 4.83 s isolated median).
+        # is unchanged (exact-parity A/B in ab_q429_r13.py, deleted; in
+        # git history at 953e8f3; 5.01 -> 4.83 s isolated median).
         newfrags.append(
             st.filter(F.col("new") != 0).select(
                 "node", F.col("new").alias("bits"), F.lit(d).cast("long").alias("d")
@@ -1951,58 +1926,20 @@ def q453_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     random surfer restarts AT THE SEEDS instead of uniformly, so the
     stationary mass measures proximity TO the seed set — the
     recommendation / trust-propagation / local-community primitive
-    (seed = the user's items, scores = what to recommend). The change
-    from q94 is exactly two expressions (the init vector and the
-    restart term gated on seed membership); every bit of the
-    fixed-point discipline carries over unchanged — int64 2^20 units,
-    floor division at the per-edge contribution, 10 unrolled sweeps,
-    recursive-CTE oracle — which is the point: a well-factored
-    iterative kernel absorbs new TELEPORT SEMANTICS without touching
-    its numeric core (the q117 distributed form works identically;
-    this one runs the q94 small-graph plan). Property tests: Σ ppr
+    (seed = the user's items, scores = what to recommend). It runs
+    q117's distributed sweeps (``_pagerank_sweeps``) with the seed set
+    as the teleport Column, which gates both the init vector and the
+    restart term; every bit of the fixed-point discipline carries over
+    unchanged — int64 2^20 units, floor division at the per-edge
+    contribution, 10 unrolled sweeps, recursive-CTE oracle. Property tests: Σ ppr
     stays below the seed count (mass leaks only through dangling-free
     damping), seeds and their out-neighbors outrank the graph median,
     and zeroing the seed set zeroes every score (no teleport, no
     mass)."""
-    o = load(spark, sf_dir, "orders")
-    e = (
-        o.select(
-            (F.col("o_custkey") % 20).cast("long").alias("src"),
-            (F.col("o_orderkey") % 20).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    od = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    ew = e.join(od, "src").localCheckpoint(eager=True)
-    seed_col = F.col("node").isin(*_PPR_SEEDS)
-    base = (15 * _PR_SCALE) // 100
-    pr = od.select(
-        F.col("src").alias("node"),
-        F.when(F.col("src").isin(*_PPR_SEEDS), _PR_SCALE)
-        .otherwise(0)
-        .cast("long")
-        .alias("pr"),
-    ).localCheckpoint(eager=True)
-    for _ in range(_PR_ITERS):
-        contrib = ew.join(pr, ew.src == pr.node).select(
-            F.col("dst"), F.expr("pr * w div outw").alias("c")
-        )
-        pr = (
-            contrib.groupBy("dst")
-            .agg(
-                (
-                    F.when(F.col("dst").isin(*_PPR_SEEDS), base)
-                    .otherwise(0)
-                    + F.expr("85 * sum(c) div 100")
-                ).alias("pr")
-            )
-            .select(F.col("dst").alias("node"), "pr")
-            .localCheckpoint(eager=True)
-        )
+    seed = F.col("node").isin(*_PPR_SEEDS)
+    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), seed)
     return pr.select(
         F.col("node").alias("team_id"),
         (F.col("pr").cast("double") / _PR_SCALE).alias("ppr"),
-        seed_col.alias("is_seed"),
+        seed.alias("is_seed"),
     )

@@ -336,7 +336,8 @@ def q225_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured SLOWER (same-session interleaved A/B, 5 reps at sf0.1:
     # no-ckpt 1.98 s [1.74, 2.02] vs lazy-ckpt 2.24 s [1.61, 2.70] vs
     # eager 2.28 s) because the block write/read costs more than the
-    # reuse AQE already provides (scripts/ab_q225_r12.py)
+    # reuse AQE already provides (ab_q225_r12.py, deleted; in git history
+    # at 953e8f3)
     ps = li.groupBy("l_orderkey", "l_suppkey").agg(F.max("l_shipdate").alias("sm"))
     os_ = ps.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.count(F.lit(1)).alias("n_supp"),

@@ -15,8 +15,14 @@ daily rollups → ratings → backtest and quality plans → upsert) generates
 153–155 distinct classes both at 12 teams × 14 days and at 8 teams × 15 days.
 At a cap of 100 an LRU that cycles through that many keys misses on every one,
 so each repeat of the pass recompiled 137–138 classes (1.6–2.0 s of Janino
-time on 4 cores, plus the JIT work on the new bytecode). At 1000 the first
-repeat compiles 0–4 classes and later repeats none. One
+time on 4 cores, plus the JIT work on the new bytecode). At 1000 a repeat
+compiles none. Whole-stage classes are named without their codegen stage
+id (``spark.sql.codegen.useIdInClassName``): AQE numbers a query's stages
+as it re-plans them, which follows the order sibling stages finish in, so
+the same stage can be id 4 in one run and id 5 in the next, and with the id
+in the class name identical code was a new cache key. After ~60 other
+registry queries in the same session, the first repeat of the season
+chain compiled 4–6 classes that way; without the id, none. One
 ``bench.py`` headline pass (66 queries, one rep, no warm-up) generates 1,164
 distinct classes, the largest single query (q410) 103; the bench repeats each
 query back to back, so it needs only the per-query working set.
@@ -66,6 +72,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Hold every generated class of a pipeline pass (module docstring).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
