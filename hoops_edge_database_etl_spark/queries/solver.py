@@ -208,7 +208,7 @@ def _idiv(a: int, b: int) -> int:
 )
 def q61_jacobi_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive Jacobi SOS solver (W12) made HASH-CHECKABLE: all solver
-    arithmetic is exact — int64 fixed-point efficiencies ({_EFF_SCALE}
+    arithmetic is exact — int64 fixed-point efficiencies (2^20
     units), order-independent integer sums, and floor-of-one-IEEE-division
     as the mean — so a DuckDB recursive CTE reproduces the fixed iteration
     count bit-for-bit. This is the oracle-checked sibling of q53's float
@@ -492,9 +492,9 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q94_pagerank_exact", oracle=_PR_ORACLE)
 def q94_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the team matchup graph (damping 0.85, {_PR_ITERS}
+    """PageRank over the team matchup graph (damping 0.85, 10
     fixed iterations), HASH-CHECKABLE like q61: all iteration arithmetic
-    is int64 fixed-point ({_PR_SCALE} units) with floor division at the
+    is int64 fixed-point (2^20 units) with floor division at the
     per-edge contribution — order-independent integer sums, so a DuckDB
     recursive CTE reproduces every sweep bit-for-bit. Dangling mass is
     dropped (every node here has out-edges by construction; the variant
@@ -752,7 +752,7 @@ def q300_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence in <= diameter sweeps; hitting the sweep cap
     (SSSP_MAX_SWEEPS) raises RuntimeError rather than return partly
     relaxed distances. The DuckDB oracle enumerates all walks of total
-    weight <= {SSSP_DIST_CAP} via a recursive CTE with SET semantics
+    weight <= 24 via a recursive CTE with SET semantics
     (the cap bounds recursion on cycles) + MIN — the exact fixed point
     Bellman-Ford reaches; both sides report only dist <= cap so the
     two terminations agree by construction. At 100 TB: edges are the
@@ -922,7 +922,7 @@ MODULARITY_COMM_DIV = 10  # community(node) = node DIV 10
 def q332_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRAPH MODULARITY of a community assignment — the quality score
     that tells you whether a clustering (here the node DIV
-    {MODULARITY_COMM_DIV} blocks; in production q62's connected
+    10 blocks; in production q62's connected
     components or a Louvain pass) actually beats random wiring:
     Q = (1/2m)·Σ_same-community [A_ij − k_i·k_j/2m]. The whole sum
     collapses to exact integers: per community, Q-contribution x (2m)²
@@ -1109,7 +1109,7 @@ def q360_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes it a PREDICTION (recommending edges you already have is the
     classic demo bug). Candidate pairs are only those with >= 1
     common neighbor — wedge-bounded, never node² — and the output is
-    a TakeOrdered top-{LINKPRED_TOP_K}. This completes the graph
+    a TakeOrdered top-25. This completes the graph
     shelf's predict step: build → score (q332) → predict; feeding
     these pairs to q268's GraphSAGE features is the classic
     two-tower recipe."""
@@ -1417,7 +1417,7 @@ def _hits_oracle() -> str:
 @query("q413_hits_scores", oracle=_hits_oracle())
 def q413_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities over the directed customer→order matchup
-    graph (q94/q117's edge derivation at mod {_HITS_MOD}) — the
+    graph (q94/q117's edge derivation at mod 24) — the
     link-analysis twin PageRank doesn't cover: a node is a good HUB if
     it points at good authorities, a good AUTHORITY if good hubs point
     at it. 8 fixed mutual-reinforcement sweeps, HASH-CHECKABLE like
@@ -1553,7 +1553,7 @@ def _kcore_oracle() -> str:
 
 @query("q414_kcore_onion", oracle=_kcore_oracle())
 def q414_kcore_onion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-CORE decomposition (k={_KCORE_K}) of the part co-purchase graph
+    """k-CORE decomposition (k=4) of the part co-purchase graph
     (parts appearing as line 1 & 2 of the same order) via iterative
     peeling, with the ONION LAYER — the sweep at which each node was
     peeled — as the output (NULL ⇒ the node survives in the 4-core).
@@ -1565,7 +1565,7 @@ def q414_kcore_onion(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-k nodes leave via LEFT ANTI joins (never NOT IN and its NULL
     trap), localCheckpoint truncates lineage per sweep, and the loop
     exits at the empirical fixpoint (17 sweeps at sf0.01, 14 at
-    sf0.001) with a hard cap matching the oracle's {_KCORE_SWEEPS}
+    sf0.001) with a hard cap matching the oracle's 24
     unrolled sweeps — sweeps past the fixpoint are no-ops on both
     engines, so the cap only needs to EXCEED the true depth, never
     equal it. At 100 TB: each sweep shuffles the surviving edges once
@@ -1714,7 +1714,7 @@ def q429_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion (the q135 loop, keyed per pivot; visited-set anti-join,
     one lazily-checkpointed state frame per sweep, early exit —
     9 sweeps suffice at
-    sf0.01, budget {_HC_SWEEPS} matches the oracle's bounded
+    sf0.01, budget 16 matches the oracle's bounded
     recursion). Unreachable pairs contribute zero — harmonic (unlike
     closeness) handles disconnected graphs natively, which is why it
     is the right member of the family for a graph that dissolves into

@@ -26,7 +26,7 @@ the hazard. tests/test_broadcast_growth_audit.py pins the per-query
 flag set to an adjudicated allowlist with a measured reason per entry.
 
 Usage:
-  python scripts/audit_broadcast_growth.py [sf_dir]              # detect
+  python scripts/audit_registry.py SF_DIR                        # detect (shared sweep)
   python scripts/audit_broadcast_growth.py --measure [sf_a sf_b] # adjudicate
   python scripts/audit_broadcast_growth.py --measure sf_a sf_b q42,q113  # subset
 """
@@ -127,37 +127,17 @@ def broadcast_metrics(df) -> list[dict]:
 
 
 def main() -> None:
+    if "--measure" not in sys.argv:
+        sys.exit(__doc__)
     from hoops_edge_database_etl_spark.queries import all_queries
     from hoops_edge_database_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="audit-broadcast-growth")
-    spark.sparkContext.setLogLevel("ERROR")
-    prior = hinted_broadcast_conf(spark)
-    queries = all_queries()
-    measure = "--measure" in sys.argv
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-
-    try:
-        if not measure:
-            sf = args[0] if args else "/root/testdata/sf0.01"
-            flagged = {}
-            for name, fn in sorted(queries.items()):
-                try:
-                    plan = (
-                        fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-                    )
-                except Exception as exc:  # pragma: no cover
-                    flagged[name] = [f"PLAN ERROR: {exc}"[:100]]
-                    continue
-                heads = broadcast_heads(plan)
-                if heads:
-                    flagged[name] = heads
-            print(json.dumps(flagged, indent=1))
-            print(
-                f"-- {len(flagged)} queries with a code-forced broadcast",
-                file=sys.stderr,
-            )
-        else:
+    with get_spark(app_name="audit-broadcast-growth") as spark:
+        spark.sparkContext.setLogLevel("ERROR")
+        prior = hinted_broadcast_conf(spark)
+        queries = all_queries()
+        args = [a for a in sys.argv[1:] if not a.startswith("--")]
+        try:
             sf_a = args[0] if args else "/root/testdata/sf0.001"
             sf_b = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
             subset = tuple(args[2].split(",")) if len(args) > 2 else None
@@ -188,9 +168,8 @@ def main() -> None:
             os.makedirs(".scratch", exist_ok=True)
             with open(".scratch/broadcast_growth_measure.json", "w") as f:
                 json.dump(results, f, indent=1)
-    finally:
-        restore_conf(spark, prior)
-    spark.stop()
+        finally:
+            restore_conf(spark, prior)
 
 
 if __name__ == "__main__":

@@ -16,17 +16,12 @@ The sweep prints every (query, broadcast-subtree head) pair so the
 adjudication is explicit; tests/test_explode_broadcast_audit.py holds
 the flag set to an allowlist with a reason per entry.
 
-Usage: python scripts/audit_explode_broadcast.py [sf_dir]
+Run: python scripts/audit_registry.py SF_DIR (the shared registry sweep)
 """
 
 from __future__ import annotations
 
-import json
-import os
 import re
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _subtree(lines: list[str], start: int) -> list[str]:
@@ -101,27 +96,3 @@ def flags_in_plan(plan: str) -> list[str]:
             hits.append(re.sub(r"#\d+L?", "#", hit.strip())[:120])
     return hits
 
-
-def main() -> None:
-    from hoops_edge_database_etl_spark.queries import all_queries
-    from hoops_edge_database_etl_spark.session import get_spark
-
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(app_name="audit-explode-broadcast")
-    flagged = {}
-    for name, fn in sorted(all_queries().items()):
-        try:
-            plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # pragma: no cover - report, keep sweeping
-            flagged[name] = [f"PLAN ERROR: {exc}"[:120]]
-            continue
-        hits = flags_in_plan(plan)
-        if hits:
-            flagged[name] = hits
-    print(json.dumps(flagged, indent=1))
-    print(f"-- {len(flagged)} queries flagged", file=sys.stderr)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -38,7 +38,7 @@ tests/test_fact_rescan_audit.py holds the flag set to an allowlist with
 a per-entry reason, so any NEW multi-scan query fails until adjudicated.
 
 Usage:
-  python scripts/audit_fact_rescan.py [sf_dir]                 # sweep
+  python scripts/audit_registry.py SF_DIR                      # sweep (shared)
   python scripts/audit_fact_rescan.py --ab q1,q2 [sf_dir] [reps]  # A/B
 
 --ab is the adjudication mode the r11 conversions used: time each named
@@ -145,25 +145,7 @@ def main() -> None:
         reps = int(sys.argv[4]) if len(sys.argv) > 4 else 2
         ab_mode(names, sf_dir, reps)
         return
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from hoops_edge_database_etl_spark.queries import all_queries
-    from hoops_edge_database_etl_spark.session import get_spark
-
-    spark = get_spark()
-    spark.sparkContext.setLogLevel("ERROR")
-    flagged = {}
-    for name, fn in sorted(all_queries().items()):
-        try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # noqa: BLE001 — report, keep sweeping
-            flagged[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
-            continue
-        hits = flags_for(plan)
-        if hits:
-            flagged[name] = hits
-    print(json.dumps(flagged, indent=2, sort_keys=True))
-    print(f"\n{len(flagged)} queries with >= {THRESHOLD} scans of one fact table",
-          file=sys.stderr)
+    sys.exit(__doc__)
 
 
 if __name__ == "__main__":

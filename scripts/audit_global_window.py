@@ -18,7 +18,7 @@ growth factor, not a guess. tests/test_global_window_audit.py holds the
 flag set to an allowlist with a measured reason per entry.
 
 Usage:
-  python scripts/audit_global_window.py [sf_dir]            # detect
+  python scripts/audit_registry.py SF_DIR                   # detect (shared sweep)
   python scripts/audit_global_window.py --measure [sf_a sf_b]  # adjudicate
 """
 
@@ -112,29 +112,14 @@ def single_partition_records(df) -> list[int]:
 
 
 def main() -> None:
+    if "--measure" not in sys.argv:
+        sys.exit(__doc__)
     from hoops_edge_database_etl_spark.queries import all_queries
     from hoops_edge_database_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="audit-global-window")
-    queries = all_queries()
-    measure = "--measure" in sys.argv
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-
-    if not measure:
-        sf = args[0] if args else "/root/testdata/sf0.01"
-        flagged = {}
-        for name, fn in sorted(queries.items()):
-            try:
-                plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-            except Exception as exc:  # pragma: no cover
-                flagged[name] = [f"PLAN ERROR: {exc}"[:100]]
-                continue
-            heads = global_window_heads(plan)
-            if heads:
-                flagged[name] = heads
-        print(json.dumps(flagged, indent=1))
-        print(f"-- {len(flagged)} queries with a global window", file=sys.stderr)
-    else:
+    with get_spark(app_name="audit-global-window") as spark:
+        queries = all_queries()
+        args = [a for a in sys.argv[1:] if not a.startswith("--")]
         sf_a = args[0] if args else "/root/testdata/sf0.001"
         sf_b = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
         results = {}
@@ -155,9 +140,9 @@ def main() -> None:
             except Exception as exc:  # pragma: no cover
                 results[name] = {"error": str(exc)[:200]}
                 print(json.dumps({name: results[name]}), flush=True)
+        os.makedirs(".scratch", exist_ok=True)
         with open(".scratch/global_window_measure.json", "w") as f:
             json.dump(results, f, indent=1)
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -1,4 +1,4 @@
-"""One-off audit for the q482/q287 hazard class: a BroadcastHashJoin
+"""Static plan audit for the q482/q287 hazard class: a BroadcastHashJoin
 (or BroadcastNestedLoopJoin) whose STREAM side is fed by an aggregate
 with no explicit re-spread in between. Such a stream side inherits the
 agg's AQE-coalesced partition count (tiny aggs coalesce to 1-2
@@ -21,16 +21,12 @@ positive, headline flags were already slope-verified by SOAK_r06, and
 the 6 never-soaked flags measured benign at sf1 (slopes 1.06-2.09,
 fan-outs calendar/grid-bounded — rows + notes in SOAK_r08.json). Run:
 
-    python scripts/audit_stream_side.py [sf_dir] [prefix,...]
+    python scripts/audit_registry.py SF_DIR   # the shared registry sweep
 """
 
 from __future__ import annotations
 
-import os
 import re
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AGG = re.compile(r"\b(ObjectHashAggregate|HashAggregate|SortAggregate)\b")
 RESPREAD = re.compile(r"REPARTITION(_BY_NUM|_BY_COL)?")
@@ -120,33 +116,3 @@ def audit_plan(plan: str) -> list[str]:
             flags.append(lines[i].strip()[:90] + " <= grouped stream agg + fan-out, no re-spread")
     return flags
 
-
-def main() -> None:
-    from hoops_edge_database_etl_spark.queries import all_queries
-    from hoops_edge_database_etl_spark.session import get_spark
-
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    prefixes = tuple(sys.argv[2].split(",")) if len(sys.argv) > 2 else ()
-    spark = get_spark(app_name="stream-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-    flagged = {}
-    for name, fn in sorted(qs.items()):
-        if prefixes and not name.startswith(prefixes):
-            continue
-        if "stream" in name:
-            continue
-        try:
-            plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:
-            print(f"SKIP {name}: {type(exc).__name__}", flush=True)
-            continue
-        hits = audit_plan(plan)
-        if hits:
-            flagged[name] = hits
-            print(f"FLAG {name}: {hits[0]}", flush=True)
-    print(f"\n{len(flagged)} queries flagged")
-
-
-if __name__ == "__main__":
-    main()

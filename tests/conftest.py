@@ -9,7 +9,9 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))  # the plan-audit detectors
 
 # sf0.01 mirrors the driver's t2 gate exactly; sf0.001 hid ordering
 # nondeterminism (duplicate keys only appear at 0.01).
@@ -36,6 +38,16 @@ def spark():
     spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "4"))
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark):
+    """{query: RegistryPlan} for the whole registry, each query function
+    called once per session; every registry-wide audit reads from it
+    (scripts/audit_registry.py)."""
+    from audit_registry import registry_plans as sweep
+
+    return sweep(spark, SF_DIR)
 
 
 @pytest.fixture(scope="session")

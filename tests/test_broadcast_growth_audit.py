@@ -12,7 +12,7 @@ fastest plan). The sf-slope soak cannot see the hazard (the broadcast
 is a small additive cost locally), and the explode/stream-side/
 global-window sweeps look for different signatures.
 
-The sweep plans every query with ``autoBroadcastJoinThreshold=-1`` and
+The audit reads every query's plan under ``autoBroadcastJoinThreshold=-1`` and
 AQE OFF, so the only surviving BroadcastExchange nodes are the ones our
 code forces (explicit hints, plus the BNLJ sides the planner must
 broadcast for non-equi outer joins — tagged by join type). Every
@@ -25,15 +25,6 @@ fails here until adjudicated.
 
 from __future__ import annotations
 
-import os
-import sys
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 #: query -> adjudicated reason (measured growth of every forced
 #: broadcast's build side at 10x data, sf0.001 -> sf0.01; artifact:
@@ -236,26 +227,25 @@ def test_detector_on_synthetic_plans():
     assert broadcast_heads(cart) == []
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_no_unadjudicated_forced_broadcast(spark):
-    from audit_broadcast_growth import (
-        broadcast_heads,
-        hinted_broadcast_conf,
-        restore_conf,
-    )
+def test_registry_sweep_restores_conf(spark, request):
+    """The registry sweep is the one place that switches AQE and the
+    broadcast threshold; it must leave the PRIOR values behind, not
+    hardcoded defaults. This is the first test in collection order to
+    request the sweep, so it sees the conf from before it ran."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    before = {k: spark.conf.get(k) for k in keys}
+    request.getfixturevalue("registry_plans")
+    assert {k: spark.conf.get(k) for k in keys} == before
 
-    from hoops_edge_database_etl_spark.queries import all_queries
 
-    prior = hinted_broadcast_conf(spark)
-    try:
-        flagged = {}
-        for name, fn in sorted(all_queries().items()):
-            plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-            heads = broadcast_heads(plan)
-            if heads:
-                flagged[name] = sorted(set(heads))
-    finally:
-        restore_conf(spark, prior)
+def test_no_unadjudicated_forced_broadcast(registry_plans):
+    from audit_broadcast_growth import broadcast_heads
+
+    flagged = {
+        name: sorted(set(heads))
+        for name, p in registry_plans.items()
+        if (heads := broadcast_heads(p.forced_broadcast))
+    }
     new = {k: v for k, v in flagged.items() if k not in ALLOWED}
     assert not new, (
         "unadjudicated code-forced broadcast (a hinted build side that "

@@ -12,7 +12,8 @@ then found statically in q42 (via jaccard_pairs), q43/q45's band joins,
 q236's positional join, and q279/q283's grid joins — all now pinned
 shuffle-hash (oracles unchanged, hash-verified by the gate).
 
-The sweep runs over every registered query's executed plan at sf0.1;
+The detector runs over every registered query's executed plan from
+the shared registry sweep (``registry_plans``, sf0.01);
 any flag NOT in the adjudicated allowlist below fails, so a new
 estimator-blind broadcast of an exploded corpus side cannot land
 silently.
@@ -20,15 +21,6 @@ silently.
 
 from __future__ import annotations
 
-import os
-import sys
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 #: query -> why its explode-under-broadcast is deliberate/bounded
 ALLOWED = {
@@ -107,18 +99,14 @@ def test_aggregate_branch_first_generate_deeper_sibling():
     assert len(hits) == 1 and "Generate" in hits[0]
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_no_unadjudicated_explode_broadcast(spark):
+def test_no_unadjudicated_explode_broadcast(registry_plans):
     from audit_explode_broadcast import flags_in_plan
 
-    from hoops_edge_database_etl_spark.queries import all_queries
-
-    flagged = {}
-    for name, fn in sorted(all_queries().items()):
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-        hits = flags_in_plan(plan)
-        if hits:
-            flagged[name] = hits
+    flagged = {
+        name: hits
+        for name, p in registry_plans.items()
+        if (hits := flags_in_plan(p.default))
+    }
     new = {k: v for k, v in flagged.items() if k not in ALLOWED}
     assert not new, (
         "unadjudicated explode-under-broadcast (the live-bug-#9 "

@@ -1,5 +1,6 @@
 """Recurring static audit for REPEATED FACT SCANS (round 11 — the q422
-class; scripts/audit_fact_rescan.py is the sweep).
+class; scripts/audit_fact_rescan.py is the detector, run over the
+shared registry sweep).
 
 When several consumers derive from one shared rollup and nothing
 materializes it, Spark re-executes the rollup — and the FACT SCAN under
@@ -29,15 +30,6 @@ MEASUREMENT CAVEAT.
 
 from __future__ import annotations
 
-import os
-import sys
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 THRESHOLD = 5
 
@@ -115,17 +107,13 @@ def test_detector_on_synthetic_plans():
     assert flags_for(five) == {"lineitem": 5}
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_no_unadjudicated_fact_rescans(spark):
+def test_no_unadjudicated_fact_rescans(registry_plans):
     from audit_fact_rescan import fact_scan_counts
 
-    from hoops_edge_database_etl_spark.queries import all_queries
-
     flagged = {}
-    for name, fn in sorted(all_queries().items()):
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    for name, p in registry_plans.items():
         hits = {
-            t: c for t, c in fact_scan_counts(plan).items() if c >= THRESHOLD
+            t: c for t, c in fact_scan_counts(p.default).items() if c >= THRESHOLD
         }
         if hits:
             flagged[name] = hits

@@ -20,15 +20,6 @@ Any query acquiring a NEW global window fails here until adjudicated.
 
 from __future__ import annotations
 
-import os
-import sys
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 #: query -> measured growth of single-partition-window input rows at 10x
 #: data (sf0.001 -> sf0.01) + the boundedness adjudication. Three classes:
@@ -135,18 +126,14 @@ def test_detector_on_synthetic_plans():
     assert global_window_heads(agg_between) == []
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_no_unadjudicated_global_window(spark):
+def test_no_unadjudicated_global_window(registry_plans):
     from audit_global_window import global_window_heads
 
-    from hoops_edge_database_etl_spark.queries import all_queries
-
-    flagged = {}
-    for name, fn in sorted(all_queries().items()):
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-        heads = global_window_heads(plan)
-        if heads:
-            flagged[name] = heads
+    flagged = {
+        name: heads
+        for name, p in registry_plans.items()
+        if (heads := global_window_heads(p.default))
+    }
     new = {k: v for k, v in flagged.items() if k not in ALLOWED}
     assert not new, (
         "unadjudicated GLOBAL window (every row through one reducer at "

@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
-
 # The contract constants live in a non-test module so the verify
 # skill's drive.py can import them without dragging in tests/conftest
 # (r10 ADVICE). EMPTY allowlist by design since round 11: the r10
@@ -106,22 +104,16 @@ _SPARK_EQUIV = {
 }
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_cross_engine_column_types_agree(spark, oracle_types):
-    """Analysis-only sweep (no query executes): every oracle output
-    column's DuckDB type must map to the Spark column's type under
-    _SPARK_EQUIV. This is the full-width version of the HUGEINT class:
-    a float column one engine computes in DOUBLE and the other returns
-    as string, or a date vs timestamp disagreement, would hash-mismatch
-    with values 'equal' to the eye. Schema analysis only — queries that
-    collect at build time still run, which is why this is @slow."""
-    from hoops_edge_database_etl_spark.queries import all_queries
-
-    qs = all_queries()
+def test_cross_engine_column_types_agree(registry_plans, oracle_types):
+    """Every oracle output column's DuckDB type must map to the Spark
+    column's type under _SPARK_EQUIV. This is the full-width version of
+    the HUGEINT class: a float column one engine computes in DOUBLE and
+    the other returns as string, or a date vs timestamp disagreement,
+    would hash-mismatch with values 'equal' to the eye. Reads the
+    schemas of the shared registry sweep; nothing executes here."""
     bad = []
     for name, cols in sorted(oracle_types.items()):
-        sdf = qs[name](spark, SF_DIR)
-        spark_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
+        spark_types = registry_plans[name].schema
         for col, typ in cols:
             ok = _SPARK_EQUIV.get(typ, set())
             if spark_types.get(col) not in ok:
@@ -132,16 +124,12 @@ def test_cross_engine_column_types_agree(spark, oracle_types):
     )
 
 
-def test_decimal38_columns_are_decimal_in_spark_too(spark, oracle_types):
+def test_decimal38_columns_are_decimal_in_spark_too(registry_plans):
     """For each allowlisted pair, the Spark query's ANALYZED schema (no
     execution) must carry decimal(38,0) at the same column — the only
     configuration where the driver hashes both sides identically."""
-    from hoops_edge_database_etl_spark.queries import all_queries
-
-    qs = all_queries()
     for name in sorted({n for n, _ in DECIMAL38_ALLOWLIST}):
-        sdf = qs[name](spark, SF_DIR)
-        spark_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
+        spark_types = registry_plans[name].schema
         for n, col in DECIMAL38_ALLOWLIST:
             if n != name:
                 continue

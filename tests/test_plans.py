@@ -4,16 +4,7 @@ did by hand must appear in Catalyst's plans — pushdown, pruning, broadcast
 
 from __future__ import annotations
 
-import os
-import sys
-
-import pytest
-
 from tests.conftest import SF_DIR
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
-)
 
 
 def _executed(df) -> str:
@@ -109,19 +100,17 @@ _PYTHON_ALLOWED = {
 }
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_no_python_in_analytic_plans(spark):
+def test_no_python_in_analytic_plans(registry_plans):
     """Every oracle-bearing query must stay JVM-side: no row-at-a-time
     BatchEvalPython anywhere, and no pandas stages except the sanctioned
     ones (§2.9's policy)."""
     from hoops_edge_database_etl_spark.queries import all_oracles
 
-    qs = _qs()
     offenders = []
     for name in all_oracles():
         if name in _PYTHON_ALLOWED:
             continue
-        plan = _executed(qs[name](spark, SF_DIR))
+        plan = registry_plans[name].default
         if (
             "BatchEvalPython" in plan
             or "MapInPandas" in plan
@@ -271,35 +260,24 @@ def test_stratified_sample_no_single_reducer_strata(spark):
     assert "hashpartitioning(lang" in plan and "__tk_pid" in plan
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_no_cartesian_product_anywhere(spark):
+def test_no_cartesian_product_anywhere(registry_plans):
     """Global antipattern ban: no query may plan a CartesianProduct — a
     non-broadcast cross join is never intentional here (1-row scalar
     broadcasts plan as BroadcastNestedLoopJoin, which is allowed).
     Streaming queries are skipped: their returned frame is a memory-sink
     scan, not the streaming plan (covered in test_streaming).
 
-    AQE is disabled for the audit (ADVICE r6): with AQE on, the inspected
-    ``executedPlan`` string depends on which stages have already
+    The audit reads the AQE-off plans (ADVICE r6): with AQE on, the
+    inspected ``executedPlan`` string depends on which stages have already
     materialized, and the q455 CartesianProduct (commit b1efced) was
     caught only on a later run because of exactly that nondeterminism.
     With AQE off the static plan is deterministic — strictly harder to
     pass, since no runtime broadcast conversion can mask a cartesian."""
-    qs = _qs()
-    offenders = []
-    # ADVICE r7: restore the PRIOR value, not a hardcoded "true" — a
-    # session configured with AQE off must leave this test unchanged.
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for name, fn in qs.items():
-            if "streaming" in name:
-                continue
-            plan = _executed(fn(spark, SF_DIR))
-            if "CartesianProduct" in plan:
-                offenders.append(name)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
+    offenders = [
+        name
+        for name, p in registry_plans.items()
+        if "streaming" not in name and "CartesianProduct" in p.aqe_off
+    ]
     assert not offenders, f"CartesianProduct planned in: {offenders}"
 
 

@@ -4,9 +4,10 @@
 STATICALLY (grouped agg feeding a broadcast join's streamed side with a
 fan-out and no re-spread — the q482/q287 class), but as a one-off script
 its adjudication lived in a docstring: a NEW hazard introduced later
-would wait until someone reran it by hand. This test runs the same
-sweep over every registered query's plan (planning only — no jobs) and
-fails when a flag appears that is not in the adjudicated allowlist.
+would wait until someone reran it by hand. This test runs the detector
+over every registered query's plan from the shared registry sweep
+(``registry_plans``) and fails when a flag appears that is not in the
+adjudicated allowlist.
 
 Each allowlist entry carries the measured reason. If this test fails on
 a new query: either fix the plan (explicit REPARTITION on the streamed
@@ -16,17 +17,7 @@ side, the q287 salt pattern) or measure it at sf1 (scale_soak
 
 from __future__ import annotations
 
-import os
-import sys
-
-import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "scripts"))
-
-from audit_stream_side import audit_plan  # noqa: E402
-
-SF_DIR = "/root/testdata/sf0.01"
+from audit_stream_side import audit_plan
 
 # name -> measured adjudication (slope = sf0.1 -> sf1 wall ratio on 10x
 # data; rows live in the cited SOAK artifact).
@@ -49,18 +40,13 @@ ALLOWLIST = {
 }
 
 
-@pytest.mark.slow  # full-registry sweep; driver tier skips (pytest.ini, VERDICT r12 item 3)
-def test_no_unadjudicated_stream_side_hazards(spark):
-    from hoops_edge_database_etl_spark.queries import all_queries
-
-    flagged = {}
-    for name, fn in sorted(all_queries().items()):
-        if "stream" in name:
-            continue  # memory-sink scans; covered in test_streaming
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-        hits = audit_plan(plan)
-        if hits:
-            flagged[name] = hits[0]
+def test_no_unadjudicated_stream_side_hazards(registry_plans):
+    flagged = {
+        name: hits[0]
+        for name, p in registry_plans.items()
+        # streaming queries return memory-sink scans; covered in test_streaming
+        if "stream" not in name and (hits := audit_plan(p.default))
+    }
 
     new = {n: h for n, h in flagged.items() if n not in ALLOWLIST}
     assert not new, (
