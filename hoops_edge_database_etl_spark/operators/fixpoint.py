@@ -22,15 +22,17 @@ def until_stable(
 ) -> DataFrame:
     """Apply ``step`` until the ``probe`` aggregates over the state repeat.
 
-    Each sweep checkpoints ``step(state)`` lazily, so lineage stays one
-    sweep deep, and the ``agg(*probe)`` collect materializes that
-    checkpoint in the same job: one job per sweep, and the driver only
-    ever sees scalars. The probe must be monotone, i.e. change iff the
-    state changes (``sum(label)`` under min-propagation over a fixed node
-    set; ``(count, sum(dist))`` when nodes are only added and distances
-    only fall), because the loop stops on the first sweep whose probe
-    equals the previous one. Raises ``RuntimeError`` naming ``what`` when
-    ``max_sweeps`` sweeps pass without a repeat.
+    Each sweep checkpoints ``step(state)`` with ``eager=False``, so
+    lineage stays one sweep deep. Under AQE that call already runs every
+    shuffle stage of the sweep, one job each; only the result stage
+    waits, and the ``agg(*probe)`` collect runs it in the probe's own
+    job. The driver only ever sees scalars. The probe must be monotone,
+    i.e. change iff the state changes (``sum(label)`` under
+    min-propagation over a fixed node set; ``(count, sum(dist))`` when
+    nodes are only added and distances only fall), because the loop
+    stops on the first sweep whose probe equals the previous one. Raises
+    ``RuntimeError`` naming ``what`` when ``max_sweeps`` sweeps pass
+    without a repeat.
     """
     prev = None
     for _ in range(max_sweeps):

@@ -25,9 +25,11 @@ def attach_ratings(
     then the Pomeroy margin (backtest_spreads.py:235-246):
     ((h_oe·a_de − a_oe·h_de)/avg) · pace/100 + hca.
 
-    The result is lazily checkpointed: a backtest reads it twice
-    (``backtest_metrics`` and ``roi_by_threshold``), and without the
-    checkpoint each read would re-run both as-of window passes."""
+    The result is checkpointed with ``eager=False``: a backtest reads it
+    twice (``backtest_metrics`` and ``roi_by_threshold``), and without
+    the checkpoint each read would re-run both as-of window passes.
+    Under AQE the call already runs the shuffle stages of both passes;
+    only the result stage waits for the first read."""
     home = asof_join(
         games.withColumnRenamed("home_team_id", "team_id"),
         ratings,

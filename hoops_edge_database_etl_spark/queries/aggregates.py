@@ -556,7 +556,7 @@ def _moments_kernel(pdf):
 def q115_skew_kernel_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECTIVELY salted two-phase pandas-kernel aggregation over a
     95%-hot key: a count pre-pass detects keys above
-    {SKEW_KERNEL_HOT_THRESHOLD} rows, ONLY those spread over 32 salted
+    20000 rows, ONLY those spread over 32 salted
     sub-groups (cold keys keep salt 0 — salting everything multiplies
     the grouped-map per-group Arrow round-trip by n_salts and was
     measured 9× SLOWER than the control at sf0.1), then the additive
@@ -3019,7 +3019,7 @@ IMPUTE_DROP_MOD = 13  # customers hashing to 0 mod 13 lose their segment
 )
 def q307_mode_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MODE IMPUTATION — categorical repair by per-group majority vote:
-    a deterministic 1/{IMPUTE_DROP_MOD} of customers lose their market
+    a deterministic 1/13 of customers lose their market
     segment (md5 punch-out simulating a lossy upstream), and each hole
     is filled with the MODE segment of the customer's nation computed
     over the SURVIVING rows only (imputing from values you still trust,
@@ -3644,7 +3644,7 @@ def q341_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B POWER PLANNER — the question asked BEFORE q219/q274/q316 ever
     run: with the metric's observed variance, (a) what's the minimum
     detectable effect at the CURRENT population split in half, and
-    (b) how many users per arm would a {MDE_TARGET_CENTS}-cent effect
+    (b) how many users per arm would a 500-cent effect
     need? Textbook normal-approximation power algebra —
     MDE = (z_α/2+z_β)·σ·sqrt(1/n₁+1/n₂) and
     n = 2σ²(z_α/2+z_β)²/Δ² — with the variance built from exact
@@ -3738,7 +3738,7 @@ def q342_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts equality: like q330, the oracle match certifies a
     THEOREM, not a shared implementation. Interval averages are one
     division each off exact integer prefix sums; bins are bounded
-    (score support / {ISO_BIN_DIV}), so the k<=i<=j lattice is
+    (score support / 20), so the k<=i<=j lattice is
     bins³ — trivial beside the single scan that builds the bins. The
     calibrated rate_iso is what q263's ECE should be measured
     AGAINST after calibration."""
@@ -4190,7 +4190,7 @@ def q355_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EMPIRICAL-BAYES SHRINKAGE — the fix for every leaderboard ranked
     by raw rates: a part returned 2-of-3 times is NOT worse than one
     returned 300-of-1000; shrink each part's return rate toward the
-    global rate with {EB_PSEUDO_N} pseudo-observations
+    global rate with 50 pseudo-observations
     ((r + m·p₀)/(n + m), the Beta-Binomial posterior mean — the same
     smoothing q234's Kneser-Ney applies to n-grams and ad systems
     apply to CTRs). Small-n parts collapse to the prior, large-n
@@ -4375,7 +4375,7 @@ def q361_wilson_lower_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw rates (and even q355's point shrinkage) don't encode in the
     ORDERING. The Wilson form (p + z²/2n ± z·sqrt(...))/(1 + z²/n)
     is pure fixed-order float algebra off exact integer (r, n) with
-    the IEEE-exempt sqrt; z² enters as the literal {WILSON_Z2_X100}/100
+    the IEEE-exempt sqrt; z² enters as the literal 384/100
     so both engines fold the same constant. A min-support HAVING
     keeps degenerate tiny denominators out of the leaderboard
     (Wilson handles them correctly but a 1-observation item is still
@@ -4459,7 +4459,7 @@ PERM_B = 64  # derandomized label reshuffles
 def q362_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANDOMIZATION (permutation) TEST — inference with no normality,
     no variance formula, no asymptotics: re-assign treatment labels
-    {PERM_B} times, recompute the arm difference each time, and the
+    64 times, recompute the arm difference each time, and the
     p-value is the rank of the observed difference in its own null
     (the +1/(B+1) form that keeps the test exact-level). The
     re-assignments are md5(user:perm:b) coins — the q354 hash-coin
@@ -5566,7 +5566,7 @@ def q390_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE-ONE-GROUP JACKKNIFE — the standard error for RATIO metrics
     (revenue per click, CTR, cost per acquisition) that the naive
     per-row variance gets WRONG because numerator and denominator
-    covary within users: bucket users into {JACKKNIFE_GROUPS} hash
+    covary within users: bucket users into 20 hash
     groups, recompute the ratio leaving each group out (cheap: totals
     minus the group's — no rescan), and the spread of the leave-one-
     out estimates IS the sampling variance, (k−1)/k·Σ(θ_g − θ̄)².

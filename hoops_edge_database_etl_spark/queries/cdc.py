@@ -755,16 +755,16 @@ def q301_key_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEQUENCE-GAP AUDIT — find every missing range in an append log's
     monotone key sequence (dropped Kafka offsets, lost CDC LSNs,
     skipped invoice numbers). The input simulates feed loss by hashing
-    out ~1/{GAP_AUDIT_DROP_MOD} of the dense orderkey space; the audit must
+    out ~1/23 of the dense orderkey space; the audit must
     recover exactly those holes (property-tested against the punch-out
     set — the audit and the corruption are independent code paths).
 
     The naive LEAD over all keys is a single-reducer global sort, so
     this runs the RANGE-PARTITIONED TWO-PASS shape (q74's cumsum
     machinery applied to LEAD): pass 1 finds intra-block gaps with a
-    per-block window (block = key DIV {GAP_AUDIT_BLOCK}); pass 2 finds
+    per-block window (block = key DIV 256); pass 2 finds
     cross-block gaps with a window over per-block (min, max) aggregates
-    — input bounded at keyspace/{GAP_AUDIT_BLOCK} rows, and the block size is
+    — input bounded at keyspace/256 rows, and the block size is
     the knob that keeps it bounded at any scale (1e6 at 100 TB). Runs
     of entirely-empty blocks collapse into one boundary gap because
     absent blocks simply don't appear. The oracle is the naive global
@@ -845,7 +845,7 @@ def q312_bitemporal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a valid time (when the order happened) and a transaction time
     (when the warehouse learned of it — here valid + a deterministic
     0-6-day booking lag). Q4-1995 monthly revenue is reported twice
-    from one conditional aggregate: the as-known-at-{BITEMP_AUDIT_TS}
+    from one conditional aggregate: the as-known-at-1996-01-01
     figure (only rows recorded before the audit instant) and the
     final figure; their difference is the restatement — the number a
     close process signs off on. This is the append-only fast path of
@@ -935,12 +935,12 @@ BACKFILL_UNIT_KEYS = 500  # max keys per backfill work unit
 def q315_backfill_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BACKFILL PLANNER — turns q301's missing-range audit into an
     executable work manifest: every gap is chunked into units of at
-    most {BACKFILL_UNIT_KEYS} keys (the replay-batch size an ingest API
+    most 500 keys (the replay-batch size an ingest API
     tolerates), keyed by (gap_id, chunk_idx) so a scheduler can fan
     units out idempotently and mark them done independently — re-running
     the planner after a partial backfill shrinks the manifest instead
     of restarting it. Audit-to-plan is one bounded explode
-    (generate_series over ceil(missing/{BACKFILL_UNIT_KEYS}) chunk
+    (generate_series over ceil(missing/500) chunk
     indices — output-sized, never keyspace-sized); the gap detection
     underneath reuses q301's range-partitioned two-pass, so the whole
     plan inherits its 100 TB shape. The unit-coverage identity (units
@@ -1004,7 +1004,7 @@ def q337_reprocess_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream) lands across MANY valid-date partitions, and each touched
     partition either takes a cheap DELTA apply (q134/q271's machinery)
     or a full REBUILD when the stale fraction clears
-    {REPROCESS_DELTA_MAX_PPM} ppm — the crossover where re-aggregating
+    100000 ppm — the crossover where re-aggregating
     beats merging. Output is the work list an orchestrator fans out:
     only touched partitions appear (the 100 TB property — cost scales
     with the DELTA, not the table), each with exact ppm staleness in

@@ -3707,10 +3707,10 @@ STORM_MIN_ERRORS = 3    # trigger threshold inside the window
 )
 def q314_retry_storm_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RETRY-STORM DETECTOR — the SRE alert that catches clients stuck in
-    tight error loops: a RANGE-framed sliding count ({STORM_WINDOW_S}s,
+    tight error loops: a RANGE-framed sliding count (21600s,
     event-TIME based, so burst width is wall-clock — not the last-N-rows
     frame, which dilates under low traffic) flags every error arriving
-    with >= {STORM_MIN_ERRORS} errors in its trailing window; triggers
+    with >= 3 errors in its trailing window; triggers
     closer than one window-width chain into EPISODES (q147's islands
     cumsum over the sparse trigger stream, not the raw events), each
     reported with span, trigger count, and peak burst. Two windows per
@@ -3781,7 +3781,7 @@ def q317_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass@k = 1 − C(n−c,k)/C(n,k) — the probability a random size-k
     subset contains a success. NOT 1−(1−c/n)^k (the biased plug-in
     that overestimates at small n — the bug the Codex paper calls
-    out). With k={PASS_AT_K} literal, the binomial ratio collapses to
+    out). With k=3 literal, the binomial ratio collapses to
     falling factorials and the whole estimator is EXACT integer
     arithmetic in ppm: (n·(n−1)·(n−2) − (n−c)(n−c−1)(n−c−2))·1e6 //
     n·(n−1)·(n−2). Here "attempts" are a user's click+purchase
@@ -3855,11 +3855,11 @@ BURN_TICKET_PPM = 1_500_000          # 1.5x sustained in the slow window
 def q320_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTI-WINDOW SLO BURN-RATE alerts — the Google SRE Workbook
     policy verbatim: burn rate = observed error rate over the budget
-    target ({SLO_ERR_NUM}/{SLO_ERR_DEN}), and a PAGE requires the
+    target (3/20), and a PAGE requires the
     fast window (1 h) AND a slow window (6 h) both over 2x — fast
     alone is noise, slow alone pages too late; a sustained 1.5x over
     24 h files a ticket. Rates are exact ppm integers
-    (errs·{SLO_ERR_DEN}·1e6 DIV total·{SLO_ERR_NUM} — cross-multiplied,
+    (errs·20·1e6 DIV total·3 — cross-multiplied,
     never float-divided, so an alert fires identically on every
     engine and partitioning). Rolling sums use RANGE frames over the
     HOUR index (gap-correct: a silent hour contributes nothing but
@@ -4149,7 +4149,7 @@ LRU_ITEM_DIV = 20  # item id = floor(value / 20): ~17 distinct items
 def q330_lru_stack_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LRU CACHE SIMULATION from an access trace — the working-set
     analysis that sizes caches before buying RAM: replay each user's
-    event stream against an LRU of capacity {LRU_CACHE_K} and report
+    event stream against an LRU of capacity 4 and report
     hit rates. The Spark side runs a REAL LRU (an ordered-dict state
     machine in applyInPandas — §2.9's sanctioned grouped-map pattern,
     one partition-local pass per user);
@@ -4555,8 +4555,8 @@ def q358_active_learning_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACTIVE-LEARNING batch selection — the labeling-ops query that
     stretches an annotation budget: rank the pool by model
     UNCERTAINTY (|2p − 1| off the q342 bin-rate model, in exact ppm)
-    and take the {AL_BATCH} most uncertain — but with a DIVERSITY cap
-    of {AL_PER_TYPE_CAP} per event type first, because uncertainty
+    and take the 20 most uncertain — but with a DIVERSITY cap
+    of 5 per event type first, because uncertainty
     sampling alone floods the batch from whichever slice the model is
     globally confused about and starves the rest (the classic AL
     failure mode; the cap is the cheap batch-mode diversity fix
@@ -4876,7 +4876,7 @@ RMST_HORIZON_DAYS = 24
 )
 def q373_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESTRICTED MEAN SURVIVAL TIME — the area under q328's KM curve up
-    to a horizon τ={RMST_HORIZON_DAYS}: "expected active days per user
+    to a horizon τ=24: "expected active days per user
     in their first τ" — the survival summary regulators and A/B
     readouts prefer over medians when curves cross or the median
     isn't reached (censoring-aware expected lifetime, directly in
@@ -5115,7 +5115,7 @@ SLA_CREDIT_LADDER = ((800_000, 250_000), (825_000, 100_000))  # (below, credit)
 def q399_sla_credits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SLA CREDIT CALCULATION — the contract arithmetic downstream of
     q320's alerts: per billing week, attainment (non-error share) in
-    exact ppm against the contracted {SLA_TARGET_PPM}, and the service
+    exact ppm against the contracted 850000, and the service
     credit from the tiered ladder (deeper miss, bigger refund — the
     standard cloud-SLA structure). Everything is integer floor
     division, because this number moves MONEY and a float rate that

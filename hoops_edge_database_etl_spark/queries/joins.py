@@ -1470,11 +1470,11 @@ def q311_popularity_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator shows head concentration but non-zero tail mass; a
     degenerate one recommends only decile 0 — the feedback loop that
     collapses catalogs, caught here before serving. Decile assignment
-    is exact integer rank arithmetic ((rank−1)·{POP_DECILES} DIV n
+    is exact integer rank arithmetic ((rank−1)·10 DIV n
     over the per-part aggregate — the q171 decile rule, part-key
     tiebroken); shares are ppm floor division. The added plan is one
     broadcast-sized join from rec slots to the part-decile dim plus a
-    {POP_DECILES}-row rollup — the recommender's own cost dominates.
+    10-row rollup — the recommender's own cost dominates.
     The rank runs over the per-part AGGREGATE (catalog-sized, not
     order-sized) via operators.rowids.stable_row_ids (r10 global-window
     audit: the old global row_number window was the entity-rank hazard

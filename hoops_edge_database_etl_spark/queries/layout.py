@@ -947,8 +947,8 @@ def q387_storage_tiering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STORAGE-TIERING PLAN — the lifecycle policy every lakehouse bill
     eventually forces: partition the store by ACCESS RECENCY (each
     user's data is a partition; last event = last access) into
-    hot (<= {TIER_HOT_DAYS}d idle, stays on NVMe/cache), warm
-    (<= {TIER_WARM_DAYS}d, standard object storage), cold (archive
+    hot (<= 2d idle, stays on NVMe/cache), warm
+    (<= 5d, standard object storage), cold (archive
     tier), and price each tier's bytes — the what-if that justifies
     an S3 lifecycle rule with data instead of a guess. Completes the
     physical-economics shelf: q269 compacts files, q273 picks

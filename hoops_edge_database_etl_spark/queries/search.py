@@ -154,7 +154,7 @@ def q401_rank_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number windows over the catalog-sized part aggregate — the
     entity-rank hazard class — and now run as chained
     operators.rowids.stable_row_ids passes; final_rank moves AFTER the
-    TakeOrdered so its window ranks only the bounded top-{_BORDA_TOP_N}
+    TakeOrdered so its window ranks only the bounded top-15
     slice (row_number over an already-globally-ordered limit is the
     same assignment). Condorcet caveat in the docstring where it
     belongs: Borda can violate majority preference — when that

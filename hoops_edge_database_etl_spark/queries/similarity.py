@@ -1566,10 +1566,10 @@ def q302_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     "negative" the user loved), and keep the first K survivors. Draws
     are md5(c:neg:i) mod |parts| — reproducible across engines, runs,
     and partitionings (no rand(): the house determinism rule). Plan:
-    buyers x {NEG_TRIES} literal tries via explode (narrow), ONE
+    buyers x 8 literal tries via explode (narrow), ONE
     anti-join against the positives table on (customer, part) — the
     shuffle; the per-customer rank orders by first successful try over
-    <= {NEG_TRIES} rows per customer (bounded window). Rejection
+    <= 8 rows per customer (bounded window). Rejection
     shortfall is explicit: a customer whose draws all collide with
     positives yields < K rows — visible in the output, property-tested,
     and at 100 TB the fix is raising tries, not resampling in a loop.
@@ -1664,19 +1664,19 @@ PQ_K = 8                  # centroids per subspace: subvectors of vec_id < 8
 )
 def q309_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCT QUANTIZATION encoding — the memory-side half of modern
-    ANN (FAISS's PQ/IVFPQ): split each {DIM}-dim vector into
-    {PQ_SUBSPACES} x {PQ_SUBDIM}-dim subvectors and store only the id
-    of the nearest codebook centroid per subspace — {PQ_SUBSPACES}
-    bytes instead of {DIM} floats, a 64x compression that turns a
+    ANN (FAISS's PQ/IVFPQ): split each 64-dim vector into
+    4 x 16-dim subvectors and store only the id
+    of the nearest codebook centroid per subspace — 4
+    bytes instead of 64 floats, a 64x compression that turns a
     100 TB embedding store into a RAM-resident index. Codebook =
-    subvectors of vec_id < {PQ_K} (deterministic "training", q63's IVF
+    subvectors of vec_id < 8 (deterministic "training", q63's IVF
     codebook rule; a real train step is k-means — q164 — feeding the
     same assignment). Distances are exact int64 fixed-point squared-L2
     (the q108 norm rule: no float accumulation, ties break on centroid
-    id). Plan: posexplode dims -> broadcast {PQ_K}x{DIM}-row codebook
+    id). Plan: posexplode dims -> broadcast 8x64-row codebook
     equi-join on the dim index -> (vec, subspace, centroid) sum -> one
-    bounded {PQ_K}-row-per-key argmin window. Everything codegen
-    JVM; per-vector cost is O({DIM} x {PQ_K}) independent of corpus
+    bounded 8-row-per-key argmin window. Everything codegen
+    JVM; per-vector cost is O(64 x 8) independent of corpus
     size."""
     e = load(spark, sf_dir, "embeddings")
     qd = e.select(
@@ -1776,7 +1776,7 @@ MRL_DIM = 16  # truncated prefix length under evaluation
 )
 def q345_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATRYOSHKA TRUNCATION eval — the question MRL embeddings let you
-    ask: if retrieval ranks by only the FIRST {MRL_DIM} of {DIM}
+    ask: if retrieval ranks by only the FIRST 16 of 64
     dimensions (4x cheaper dot products, 4x smaller index), how much
     of full-precision top-3 survives? Same recall@k harness as q251,
     but the "approximate" side is a DIMENSION PREFIX instead of an LSH
@@ -1897,7 +1897,7 @@ ELBOW_KS = (2, 3, 4, 5, 6)
 def q402_elbow_wcss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ELBOW CURVE for k selection — q164 runs Lloyd at one k; this
     prices the CHOICE: within-cluster sum of squares at each k in
-    {ELBOW_KS} (deterministic first-k codebooks, q309's rule), the
+    2..6 (deterministic first-k codebooks, q309's rule), the
     discrete second difference as the curvature, and the max-
     curvature row flagged as the KNEE — the classic heuristic made
     exact, because with int64 fixed-point distances the WCSS values
@@ -2319,7 +2319,7 @@ def q470_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick a maximally-spread subset of an embedding space (coresets for
     active learning / dataset distillation; the greedy is the
     textbook 2-approximation to the k-center optimum). Seeded at
-    vec_id 0, each of the {_KC_K} steps promotes the candidate FARTHEST
+    vec_id 0, each of the 8 steps promotes the candidate FARTHEST
     from the selected set (argmax of min-distance, vec_id tiebreak)
     and folds the winner's distances into every survivor's running
     min. All distances are exact int64 L2² on the q46/q433 24-bit

@@ -299,7 +299,7 @@ Q80_BIN = 500.0  # totalprice histogram bin width
 )
 def q80_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram-sketch quantile estimation over o_totalprice: fixed
-    {Q80_BIN}-wide bins, per-bin counts (one map-side-combining shuffle —
+    500-wide bins, per-bin counts (one map-side-combining shuffle —
     the whole sketch), then the q-th value is located by cumulative count
     and linearly interpolated within its bin. Deterministic — no
     RNG, no data-dependent bin edges — so DuckDB reproduces it exactly;
@@ -359,7 +359,7 @@ def q93_exact_quantile_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT order statistics without a global sort — the scale answer to
     "median of 100 TB": the oracle sorts all rows (fine for DuckDB at
     sf0.01); the Spark plan never does. Histogram selection instead:
-      1. one map-side-combining pass bins values ({Q80_BIN}-wide) —
+      1. one map-side-combining pass bins values (500-wide) —
          the only full-data shuffle, carrying one count per occupied bin;
       2. the bin holding the k-th row is located by cumulative count over
          the BOUNDED histogram (range/width rows, data-size independent);
@@ -443,7 +443,7 @@ def q107_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist_cum = hist.withColumn("cum", F.sum("cnt").over(wb))
     t = s.groupBy("prio").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    qs = spark.createDataFrame([(0.5,), (0.9,)], "quantile double")
+    qs = local_frame(spark, [(0.5,), (0.9,)], "quantile double")
     k = t.crossJoin(F.broadcast(qs)).withColumn(
         "kk", F.ceil(F.col("quantile") * F.col("n").cast("double")).cast("long")
     )
@@ -1772,10 +1772,10 @@ def q329_density_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (series x hour-of-day x value-bin) grid of counts and sums
     aggregated WHERE THE DATA LIVES, rendered client-side as a
     heatmap. Output cardinality is fixed by the grid (5 x 24 x
-    {DENSITY_VALUE_BIN}-dollar bins), independent of input rows — the
+    25-dollar bins), independent of input rows — the
     property that makes dashboards over raw events possible at all.
     Integer bin arithmetic (epoch mod 86400 int-div 3600; dollars
-    int-div {DENSITY_VALUE_BIN}) so every point lands in the same cell
+    int-div 25) so every point lands in the same cell
     on every engine; sums carried in cents for exact drill-through
     (the cell's sum/n reproduces the tooltip average with no float
     re-aggregation). One map-side-combining rollup — the cheapest

@@ -5,7 +5,7 @@ non-SQL-expressible, SURVEY.md §2.5 W10/W11) and the normalize layer
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -520,7 +520,7 @@ def q94_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             contrib[r["dst"]] = contrib.get(r["dst"], 0) + c
         pr = {n: base + (85 * c) // 100 for n, c in contrib.items()}
     out = sorted((n, v / _PR_SCALE) for n, v in pr.items())
-    return spark.createDataFrame(out, "team_id long, pagerank double")
+    return local_frame(spark, out, "team_id long, pagerank double")
 
 
 @query("q117_pagerank_distributed", oracle=_PR_ORACLE)
@@ -530,54 +530,51 @@ def q117_pagerank_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     each damped sweep is contributions-join → groupBy(dst) SUM (exact
     int64 fixed-point, floor division at the per-edge contribution — the
     identical arithmetic q94 runs on its collected matrix, so BOTH share
-    one oracle). localCheckpoint after every sweep truncates the lineage
-    (the q62 recipe) — plan depth stays O(1) per sweep instead of
-    compounding, and the checkpointed rank vector is O(nodes), the only
-    state that persists between sweeps. At 100 TB: edges shuffle once per
-    sweep on dst, the rank side is node-sized (broadcastable when nodes
-    ≪ edges); dangling mass handling matches q94 (every node here has
-    out-edges by construction).
+    one oracle). The 10 sweeps are one SQL CTE chain that Spark analyzes
+    once (``_pagerank_sweeps``): the call checkpoints the edge matrix and
+    runs nothing else, and AQE runs the chain stage by stage at the
+    action. The rank vector is O(nodes), the only state carried between
+    sweeps. At 100 TB: edges shuffle once per sweep on dst, the rank side
+    is node-sized (broadcastable when nodes ≪ edges); dangling mass
+    handling matches q94 (every node here has out-edges by construction).
 
     q94 is the right plan when nodes fit on the driver (league-sized
     graphs); THIS is the plan when they don't. Same bits either way."""
-    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), F.lit(True))
+    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), "TRUE")
     return pr.select(
         F.col("node").alias("team_id"),
         (F.col("pr").cast("double") / _PR_SCALE).alias("pagerank"),
     )
 
 
-def _pagerank_sweeps(e: DataFrame, teleport: Column) -> DataFrame:
-    """q94's sweeps as DataFrames: (node, pr) after ``_PR_ITERS`` sweeps
-    over the (src, dst, w) edges. ``teleport`` is a boolean Column over
+def _pagerank_sweeps(e: DataFrame, teleport: str) -> DataFrame:
+    """q94's sweeps as one SQL statement: (node, pr) after ``_PR_ITERS``
+    sweeps over the (src, dst, w) edges. ``teleport`` is SQL text over
     ``node`` marking the restart set: the initial vector puts
     ``_PR_SCALE`` units on it and each sweep adds the 15% restart mass to
-    it. ``F.lit(True)`` is uniform restart (q117); the optimizer folds it
-    away, leaving q117's plans as they were before the sweep was shared."""
+    it (``"TRUE"`` is uniform restart, q117).
+
+    The sweeps are unrolled into a CTE chain pr0 … pr10 and handed to
+    Spark as one statement, so the growing self-join is analyzed once,
+    not once per sweep; the lineage is the fixed 10 sweeps deep, and AQE
+    still runs it stage by stage. The edge matrix is the one checkpoint:
+    every sweep reads it."""
     od = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    # edge matrix + out-weights are reused every sweep: checkpoint once
     ew = e.join(od, "src").localCheckpoint(eager=True)
     base = (15 * _PR_SCALE) // 100
-    pr = (
-        od.select(F.col("src").alias("node"))
-        .withColumn("pr", F.when(teleport, _PR_SCALE).otherwise(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_PR_ITERS):
-        contrib = ew.join(pr, ew.src == pr.node).select(
-            F.col("dst"),
-            F.expr("pr * w div outw").alias("c"),  # ints >= 0: div == floor
+    ctes = [
+        f"pr0 AS (SELECT node, CAST(IF({teleport}, {_PR_SCALE}, 0) AS BIGINT) AS pr"
+        " FROM (SELECT DISTINCT src AS node FROM {ew}))"
+    ]
+    for k in range(1, _PR_ITERS + 1):
+        # ints >= 0, so div == floor
+        ctes.append(
+            f"pr{k} AS (SELECT node, IF({teleport}, {base}, 0) + flow AS pr FROM ("
+            " SELECT e.dst AS node, 85 * SUM(p.pr * e.w div e.outw) div 100 AS flow"
+            f" FROM {{ew}} e JOIN pr{k - 1} p ON e.src = p.node GROUP BY e.dst))"
         )
-        pr = (
-            contrib.groupBy(F.col("dst").alias("node"))
-            .agg(F.expr("85 * sum(c) div 100").alias("flow"))
-            .select(
-                "node",
-                (F.when(teleport, base).otherwise(0) + F.col("flow")).alias("pr"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return pr
+    sql = "WITH " + ",\n".join(ctes) + f"\nSELECT node, pr FROM pr{_PR_ITERS}"
+    return e.sparkSession.sql(sql, ew=ew)
 
 
 @query(
@@ -1928,18 +1925,18 @@ def q453_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommendation / trust-propagation / local-community primitive
     (seed = the user's items, scores = what to recommend). It runs
     q117's distributed sweeps (``_pagerank_sweeps``) with the seed set
-    as the teleport Column, which gates both the init vector and the
-    restart term; every bit of the fixed-point discipline carries over
-    unchanged — int64 2^20 units, floor division at the per-edge
-    contribution, 10 unrolled sweeps, recursive-CTE oracle. Property tests: Σ ppr
-    stays below the seed count (mass leaks only through dangling-free
-    damping), seeds and their out-neighbors outrank the graph median,
-    and zeroing the seed set zeroes every score (no teleport, no
-    mass)."""
-    seed = F.col("node").isin(*_PPR_SEEDS)
-    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), seed)
+    as the teleport predicate (``node IN (0, 7)``), which gates both the
+    init vector and the restart term; every bit of the fixed-point
+    discipline carries over unchanged — int64 2^20 units, floor division
+    at the per-edge contribution, 10 unrolled sweeps, recursive-CTE
+    oracle. Property tests: Σ ppr stays below the seed count (mass leaks
+    only through dangling-free damping), seeds and their out-neighbors
+    outrank the graph median, and zeroing the seed set zeroes every
+    score (no teleport, no mass)."""
+    teleport = f"node IN ({', '.join(str(s) for s in _PPR_SEEDS)})"
+    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), teleport)
     return pr.select(
         F.col("node").alias("team_id"),
         (F.col("pr").cast("double") / _PR_SCALE).alias("ppr"),
-        seed.alias("is_seed"),
+        F.expr(teleport).alias("is_seed"),
     )

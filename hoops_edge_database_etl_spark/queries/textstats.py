@@ -720,7 +720,7 @@ def q111_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     lay documents along the cumulative token axis (q74's two-pass
     distributed cumsum — range partitions, per-range sums, broadcast
     base offsets, no global window) and keep every doc whose token span
-    crosses a {_Q111_STRIDE}-token stride boundary. Selection
+    crosses a 5000-token stride boundary. Selection
     probability is exactly proportional to token count, the sample is
     deterministic and repartition-proof, and n_strides doubles as the
     doc's integer sampling weight — the weighted analogue of q73's
@@ -1895,13 +1895,13 @@ def q303_grouped_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same fold and no entity leaks across the train/eval line (the
     grouped sibling of q68's doc-level split; leakage through shared
     groups is the classic CV inflation bug). Fold = md5(custkey)
-    first-32-bits mod {KFOLD_K}: deterministic, repartition-proof,
+    first-32-bits mod 5: deterministic, repartition-proof,
     stable under re-runs and engine swaps — a new row for an existing
     customer joins its fold with no reshuffling of anyone else (the
     property rand()-based splits lack). Output is the balance report a
     pipeline gates on: groups/rows/revenue per fold should be near-
     uniform; exact disjointness is property-tested. Plan: one scan
-    projection + one {KFOLD_K}-group rollup with COUNT DISTINCT on the
+    projection + one 5-group rollup with COUNT DISTINCT on the
     group key (two-level agg, combiner-friendly)."""
     o = load(spark, sf_dir, "orders")
     fold = (
@@ -1973,7 +1973,7 @@ def q304_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacement characters (lossy transcodes), residual HTML markup,
     and unexpected multibyte density before a tokenizer bakes them
     into a vocabulary. The clean synthetic corpus carries none, so a
-    deterministic md5-selected 1/{ENC_CORRUPT_MOD} of docs is wrapped
+    deterministic md5-selected 1/11 of docs is wrapped
     with <p> tags, a UTF-8 'é', and a U+FFFD — and the audit must
     flag EXACTLY that subset (property-tested against the injection
     list; audit and injection are separate expressions). Counting is
@@ -2107,7 +2107,7 @@ TRUNC_CONTEXT_TOKENS = 120  # context-window budget per document
 def q322_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUNCATION-LOSS accounting — before fixing a context length for
     training or embedding, measure what a hard cut at
-    {TRUNC_CONTEXT_TOKENS} tokens actually destroys: per source, docs
+    120 tokens actually destroys: per source, docs
     affected and tokens lost, in exact ppm of the corpus. The loss
     curve across candidate budgets (re-run with a different literal,
     or one pass with an array of budgets) is how the 512-vs-1024-vs-
@@ -2188,7 +2188,7 @@ def q326_mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline applied to curriculum order) — property-tested on
     prefix composition. Per-source ranks are partitioned windows;
     the global sort exists only because a SCHEDULE is a total order —
-    emitted here as a bounded {MIX_SCHEDULE_LEN}-row prefix (orderBy
+    emitted here as a bounded 200-row prefix (orderBy
     + limit = distributed TakeOrdered, no single-reducer window; the
     full 100 TB schedule would go to a range-partitioned writer
     sorted WITHIN files by vtime)."""
@@ -2501,7 +2501,7 @@ KNAPSACK_TOKEN_BUDGET = 10_000
     """,
 )
 def q375_fractional_knapsack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FRACTIONAL KNAPSACK curation — spend a {KNAPSACK_TOKEN_BUDGET}-
+    """FRACTIONAL KNAPSACK curation — spend a 10000-
     token training budget on the docs with the best value-per-token
     (distinct-vocabulary yield here; any quality score slots in):
     sort by density, take greedily, and split the ONE boundary doc
@@ -2622,10 +2622,10 @@ PREF_PAIRS_PER_GROUP = 5
 def q404_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PREFERENCE-PAIR MINING — DPO/RLHF data prep from scored corpora:
     within each group (language here; prompt-id in production), emit
-    (chosen, rejected) pairs whose quality gap clears {PREF_MARGIN} —
+    (chosen, rejected) pairs whose quality gap clears 0.15 —
     the margin is the label-noise guard, because a pair separated by
     less than scorer noise teaches the reward model static — capped
-    at the {PREF_PAIRS_PER_GROUP} widest gaps per group (extreme
+    at the 5 widest gaps per group (extreme
     pairs are the cheapest signal; NEAR pairs are curriculum for
     later rounds — flip the ORDER BY). Quality is q50's composite
     verbatim (one formula, composed — the q70 discipline), and the
@@ -2633,13 +2633,13 @@ def q404_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The pair join is EXTREME-PRUNED, not all-pairs (round 8: the sf1
     soak measured the brute-force join at slope 63 — docs-per-lang²
-    workload growth): a pair can rank in the top {K} by
+    workload growth): a pair can rank in the top 5 by
     (gap DESC, chosen, rejected) ONLY if its chosen is among the
-    lang's top {K} qualities and its rejected among the bottom {K}
-    (otherwise {K} docs each yield a strictly earlier-ranked pair —
+    lang's top 5 qualities and its rejected among the bottom 5
+    (otherwise 5 docs each yield a strictly earlier-ranked pair —
     greater gap, or equal gap with a smaller tiebreak id). Two rank
-    windows reduce each lang to {K} + {K} candidate docs, the join is
-    {K}x{K} per group, and the result is provably IDENTICAL to the
+    windows reduce each lang to 5 + 5 candidate docs, the join is
+    5x5 per group, and the result is provably IDENTICAL to the
     all-pairs form — the oracle still computes the brute-force join,
     so the hash check is the proof on every run. Property-tested:
     every gap >= margin, chosen quality > rejected quality, per-group

@@ -803,7 +803,7 @@ CARRY_RATE_PPM_PER_DAY = 500  # 0.05%/day holding cost
 def q398_carrying_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CARRYING COST — q382 lays the open book out by age bucket; this
     prices it: holding cost accrues per cent-day (value x days open x
-    a {CARRY_RATE_PPM_PER_DAY} ppm/day rate — the cost-of-capital +
+    a 500 ppm/day rate — the cost-of-capital +
     storage + obsolescence rate finance hands you), so the metric
     that matters is Σ cents·age_days, an EXACT integer that buckets
     destroy (two orders in '61-90' can differ 30 days of accrual).

@@ -2028,7 +2028,7 @@ def q352_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query on the segments) yields the full segmentation.
     Integer dollars keep Σx² in int64 (the q323 lesson); gains are
     fixed-order float expressions off exact prefixes; min segment
-    {BINSEG_MIN_SEG} days guards degenerate end splits. Property-
+    3 days guards degenerate end splits. Property-
     tested against an O(n²) Python recomputation and a planted-shift
     construction."""
     ev = load(spark, sf_dir, "events")
@@ -2351,7 +2351,7 @@ EVENT_WINDOW = 5       # offsets −W..+W reported
 )
 def q372_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EVENT STUDY — finance's launch-impact lens without a control
-    group: each day in the ±{EVENT_WINDOW}-day window around the
+    group: each day in the ±5-day window around the
     event earns an ABNORMAL return (actual minus the pre-window
     baseline mean — the counterfactual is the series' own calm
     past), and the CUMULATIVE abnormal return (CAR) is the running
@@ -2362,7 +2362,7 @@ def q372_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     outage, press). Baseline strictly precedes the window (no
     event-day leakage into the counterfactual — the classic bug);
     abnormal returns are fixed-order floats off exact cents; the CAR
-    fold is an ordered cumulative window over 2·{EVENT_WINDOW}+1
+    fold is an ordered cumulative window over 2·5+1
     rows. Per-security studies at scale = one more partition key on
     every window."""
     ev = load(spark, sf_dir, "events")

@@ -214,3 +214,27 @@ def test_pagerank_distributed_matches_collected(spark):
     a = sorted(tuple(r) for r in q94_pagerank_exact(spark, SF_DIR).collect())
     b = sorted(tuple(r) for r in q117_pagerank_distributed(spark, SF_DIR).collect())
     assert a == b
+
+
+def test_pagerank_distributed_call_runs_no_job_per_sweep(spark, monkeypatch):
+    """Calling q117 (no action) runs only the edge checkpoint: the sweeps
+    are one statement that Spark analyzes once, so the jobs the call runs
+    do not depend on the sweep count."""
+    from hoops_edge_database_etl_spark.queries import solver
+    from tests.conftest import SF_DIR
+
+    sc = spark.sparkContext
+
+    def call_jobs(group):
+        sc.setJobGroup(group, "q117 call without an action")
+        try:
+            solver.q117_pagerank_distributed(spark, SF_DIR)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("tests", "tests")
+
+    sweeps = solver._PR_ITERS
+    full = call_jobs("q117-call-all-sweeps")
+    monkeypatch.setattr(solver, "_PR_ITERS", 1)
+    one = call_jobs("q117-call-one-sweep")
+    assert full == one, f"the call ran {full} jobs for {sweeps} sweeps, {one} for one"
