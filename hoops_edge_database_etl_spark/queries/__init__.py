@@ -34,525 +34,14 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# Driver-coverage rotation (the driver caps each round at ~50 queries,
-# walked in dict order): NEW never-checked queries first, then the stalest
-# families — everything whose latest CORRECTNESS row is r1, then r2 (r3/r4
-# rows are fresh; they follow in registration order).  Regenerate each
-# round from the CORRECTNESS_r{N}.json history.
-_DRIVER_PRIORITY = [
-    # never driver-checked (oldest numbers first); the driver's
-    # ~50/round cap walks this list in order
-    "q459_spearman_rank_corr",
-    "q460_kruskal_wallis",
-    "q461_gopher_quality_rules",
-    "q462_allen_relations",
-    "q463_dtw_distance",
-    "q464_levenshtein_blocking",
-    "q465_ljung_box",
-    "q466_page_hinkley",
-    "q467_lz78_complexity",
-    "q468_runs_test",
-    "q469_friedman_test",
-    "q470_kcenter_coreset",
-    "q471_shuffle_audit",
-    "q472_risk_coverage",
-    "q473_newsvendor",
-    "q474_markov_attribution",
-    "q475_sketch_quantile_gate",
-    "q476_join_view_maintenance",
-    "q477_sequential_patterns",
-    "q478_cramer_von_mises",
-    "q479_hilbert_locality",
-    "q480_pcm_silence_runs",
-    "q481_hamming_code_audit",
-    "q482_label_propagation",
-    "q483_subsequence_patterns_3",
-    "q484_effect_sizes",
-    "q485_weighted_jaccard",
-    # latest driver row is r1
-    "q41_exact_dedup",
-    "q42_ngram_jaccard",
-    "q43_minhash_lsh",
-    "q44_simhash",
-    "q45_simhash_pairs",
-    "q46_cosine_top_pairs",
-    "q47_ann_sign_lsh",
-    "q48_knn_brute_force",
-    "q49_lang_id",
-    "q50_quality_score",
-    "q51_token_stats",
-    "q52_fingerprint_clusters",
-    "q54_normalize_layer",
-    "q60_embedding_near_dup",
-    # latest driver row is r2
-    "q01_pricing_summary",
-    "q02_filter_pushdown",
-    "q03_topk_orders",
-    "q04_conditional_record",
-    "q05_value_clamp",
-    "q06_safe_division",
-    "q07_union_stack",
-    "q08_percent_ratio",
-    "q09_date_arithmetic",
-    "q10_lenient_cast",
-    "q11_dim_enrich_join",
-    "q12_inner_join_revenue",
-    "q13_first_match_join",
-    "q14_anti_join_gaps",
-    "q15_semi_join",
-    "q16_self_join_opponent",
-    "q17_asof_join",
-    "q18_fuzzy_name_join",
-    "q19_referential_integrity",
-    "q20_two_sided_expansion",
-    "q21_weighted_avg",
-    "q22_mode_per_group",
-    "q23_pearson_corr",
-    "q24_error_metrics",
-    "q25_group_having",
-    "q26_rollup",
-    "q27_anomaly_detection",
-    "q28_conditional_mean_gap",
-    "q29_null_profile",
-    "q30_duplicate_stats",
-    "q33_no_leakage_expanding",
-    "q34_latest_per_group",
-    "q35_percentile_composite",
-    "q36_interval_integration",
-    "q37_session_window",
-    "q38_lag_delta",
-    "q39_moving_average",
-    "q40_first_last_value",
-    "q55_sql_rowcount_matrix",
-    "q56_sql_join_coverage",
-    "q57_sql_case_rates",
-    "q58_sql_top_n",
-    "q59_sql_referential_gaps",
-    "q64_salted_agg",
-    "q65_range_join",
-    "q67_sql_window_suite",
-    "q75_json_extraction",
-    "q76_pivot",
-    # latest driver row is r4
-    "q31_running_total",
-    "q32_date_spine_rollup",
-    "q53_iterative_ratings",
-    "q61_jacobi_exact",
-    "q62_dedup_clusters",
-    "q63_ann_ivf",
-    "q66_binary_metadata",
-    "q68_dataset_split",
-    "q69_dedup_corpus",
-    "q70_training_corpus",
-    "q71_streaming_rollup",
-    "q72_kmv_distinct_sketch",
-    "q73_stratified_sample",
-    "q74_sequence_packing",
-    "q77_sql_cube",
-    "q78_sql_exists",
-    "q79_hll_distinct",
-    "q80_histogram_quantiles",
-    "q81_bloom_semi_join",
-    "q82_decontamination",
-    "q83_sql_grouping_sets",
-    "q84_boilerplate_ngrams",
-    "q85_topk_per_group",
-    "q86_rating_spine",
-    "q87_skew_join_salted",
-    "q88_skew_join_unsalted",
-    "q89_funnel",
-    "q90_cohort_retention",
-    "q91_gapfill_interpolate",
-    "q92_keyword_extraction",
-    "q93_exact_quantile_select",
-    "q94_pagerank_exact",
-    "q95_streaming_dedup",
-    "q96_sql_rank_suite",
-    "q97_sql_set_ops",
-    "q98_pii_scrub",
-    "q99_repetition_filter",
-    "q100_row_ids",
-    "q101_scd2_merge",
-    "q102_snapshot_diff",
-    "q103_label_centroids",
-    "q104_skew_profile",
-    "q105_region_revenue",
-    "q106_shipping_priority",
-    "q107_grouped_median",
-    "q108_vector_norms",
-    "q109_source_mix",
-    "q110_vocab_head",
-    "q111_weighted_sample",
-    "q112_ordered_group_concat",
-    # latest driver row is r5
-    "q113_possession_sessionize",
-    "q114_rating_invariants",
-    "q115_skew_kernel_salted",
-    "q116_skew_kernel_unsalted",
-    "q117_pagerank_distributed",
-    "q118_triangle_count",
-    "q119_pareto_frontier",
-    "q120_grouped_ols",
-    "q121_interval_concurrency",
-    "q122_cooccurrence_lift",
-    "q123_array_hof_suite",
-    "q125_countmin_heavy_hitters",
-    "q126_kmv_set_ops",
-    "q127_mad_outliers",
-    "q128_sliding_distinct",
-    "q129_ts_interpolate",
-    "q130_ewma_window",
-    "q131_doc_chunks",
-    "q132_domain_mix",
-    "q133_zorder_skipping",
-    "q134_incremental_agg",
-    "q135_bfs_hops",
-    "q136_sql_correlated_scalar",
-    "q137_stream_stream_join",
-    "q138_substring_decontaminate",
-    "q139_session_conversion",
-    "q140_winsorize",
-    "q141_pca_power_iteration",
-    "q142_cogroup_reconcile",
-    "q143_column_profiler",
-    "q144_welch_ttest",
-    "q145_audio_pcm_features",
-    "q146_video_frame_sample",
-    "q147_interval_merge",
-    "q148_vocab_ids",
-    "q149_bloom_block_skipping",
-    "q150_events_endpoint",
-    "q151_expectations",
-    "q152_ols_scoring",
-    "q153_equidepth_histogram",
-    "q154_setsim_prefix_join",
-    "q155_audience_overlap",
-    "q156_streaming_session_window",
-    "q157_time_weighted_avg",
-    "q158_chi_square",
-    "q159_seasonal_anomalies",
-    "q160_markov_transitions",
-    "q161_gini_diversity",
-    "q162_weighted_median",
-    "q163_hierarchical_share",
-    # latest driver row is r6
-    "q124_touch_attribution",
-    "q164_kmeans_lloyd",
-    "q165_containment_dedup",
-    "q166_rfm_segments",
-    "q167_cusum_changepoint",
-    "q168_tvd_drift",
-    "q169_unpivot_long",
-    "q170_bigram_surprise",
-    "q171_decile_lift",
-    "q172_bootstrap_variance",
-    "q173_merkle_table_diff",
-    "q174_asof_forward",
-    "q175_normalized_dedup",
-    "q176_int8_quantize",
-    "q177_oov_rate",
-    "q178_autocorrelation",
-    "q179_funnel_latency_median",
-    "q180_merge_upsert",
-    "q181_sparse_cosine_sources",
-    "q182_path_trigrams",
-    "q183_sql_set_ops_all",
-    "q184_temporal_dim_join",
-    "q185_clamped_balance",
-    "q186_pseudonymize",
-    "q187_rolling_slope",
-    "q188_bounce_rate",
-    "q189_confusion_matrix",
-    "q190_null_safe_join",
-    "q191_sql_filtered_aggs",
-    "q192_explode_outer",
-    "q193_correlation_matrix",
-    "q194_ohlc_bars",
-    "q195_cdc_compaction",
-    "q196_small_qty_revenue",
-    "q197_dominant_suppliers",
-    "q198_iqr_outliers",
-    "q199_join_cardinality",
-    "q200_streaming_cdc_compaction",
-    "q201_trending_rank_delta",
-    "q202_cumulative_adoption",
-    "q203_quality_router",
-    "q204_sql_grouping_id",
-    "q205_linear_attribution",
-    "q206_fifo_allocation",
-    "q207_map_column_ops",
-    "q208_value_percentiles",
-    "q209_lorenz_concentration",
-    "q210_golden_record",
-    "q211_rate_limit_violations",
-    "q212_funnel_timeout",
-    # latest driver row is r7
-    "q213_bitmap_presence",
-    "q214_benford_digits",
-    "q215_emd_drift",
-    "q216_fiscal_calendar",
-    "q217_asof_nearest",
-    "q218_ks_test",
-    "q219_srm_check",
-    "q220_volume_shipping",
-    "q221_important_parts",
-    "q222_customer_distribution",
-    "q223_top_supplier",
-    "q224_disjunctive_predicates",
-    "q225_waiting_suppliers",
-    "q226_sales_opportunity",
-    "q227_market_share",
-    "q228_segment_dedup",
-    "q229_bpe_merge_step",
-    "q230_sql_lateral_topk",
-    "q231_temperature_mix",
-    "q232_sketch_rollup_merge",
-    "q233_regex_pretokenize",
-    "q234_kn_continuation_counts",
-    "q235_inverted_index",
-    "q236_phrase_search",
-    "q237_event_pattern_match",
-    "q238_exact_auc",
-    "q239_hierarchy_rollup",
-    "q240_ndcg_at_10",
-    "q241_k_anonymity",
-    "q242_feature_hashing",
-    "q243_loo_target_encoding",
-    "q244_copurchase_topk",
-    "q245_length_bucketed_batching",
-    "q246_hard_negative_mining",
-    "q247_reciprocal_rank_fusion",
-    "q248_half_life_decay",
-    "q249_incremental_dedup",
-    "q250_maxsim_late_interaction",
-    "q251_ann_recall_eval",
-    "q252_pit_features",
-    "q253_matched_controls",
-    "q254_delta_encoding_estimate",
-    "q255_cohens_kappa",
-    "q256_maxmin_fair_share",
-    "q257_capped_sessions",
-    "q258_time_decay_attribution",
-    "q259_semantic_decontamination",
-    "q260_prefix_cache_analysis",
-    "q261_uplift_deciles",
-    "q262_churn_labels",
-    # latest driver row is r8
-    "q263_calibration_error",
-    "q264_deletion_propagation",
-    "q265_rank_biased_overlap",
-    "q266_safety_blocklist",
-    "q267_repeat_factor_manifest",
-    "q268_graph_neighbor_agg",
-    "q269_compaction_planner",
-    "q270_dependency_profiling",
-    "q271_mv_retraction_maintenance",
-    "q272_bloom_fpr_audit",
-    "q273_codec_advisor",
-    "q274_sequential_ab_looks",
-    "q275_index_advisor",
-    "q276_ledger_reconciliation",
-    "q277_masking_policy",
-    "q278_bandit_allocation",
-    "q279_spatial_radius_join",
-    "q280_nearest_facility",
-    "q281_spatial_multires_rollup",
-    "q282_zone_containment_join",
-    "q283_dbscan_core_points",
-    "q284_suppressed_rollup",
-    "q285_topk_plus_other",
-    "q286_dataset_fingerprint",
-    "q287_behavior_edit_distance",
-    "q288_consistent_hash_rebalance",
-    "q289_billing_proration",
-    "q290_adstock_carryover",
-    "q291_orphan_entity_sweep",
-    "q292_business_day_sla",
-    "q293_streaming_fingerprint",
-    "q294_max_drawdown",
-    "q295_coverage_gaps",
-    "q296_daily_streaks",
-    "q297_mann_whitney_u",
-    "q298_tiered_pricing",
-    "q299_watermark_advisor",
-    "q300_weighted_sssp",
-    "q301_key_gap_audit",
-    "q302_negative_sampling",
-    "q303_grouped_kfold",
-    "q304_encoding_audit",
-    "q305_utf8_accounting",
-    "q306_quantile_normalize",
-    "q307_mode_imputation",
-    "q308_lsh_recall_eval",
-    "q309_pq_assign",
-    "q310_price_volume_mix",
-    "q311_popularity_bias",
-    "q312_bitemporal_audit",
-    # latest driver row is r9
-    "q313_shapley_attribution",
-    "q315_backfill_planner",
-    "q316_cuped_adjustment",
-    "q317_pass_at_k",
-    "q318_dag_critical_path",
-    "q319_join_strategy_advisor",
-    "q320_slo_burn_rate",
-    "q321_seasonal_naive_backtest",
-    "q322_truncation_loss",
-    "q323_oneway_anova",
-    "q324_double_charge_detector",
-    "q325_partition_advisor",
-    "q326_mix_schedule",
-    "q327_diff_in_diff",
-    "q328_kaplan_meier",
-    "q329_density_grid",
-    "q330_lru_stack_distance",
-    "q331_interval_forecast_eval",
-    "q332_graph_modularity",
-    "q333_median_ci",
-    "q334_posthoc_pairwise",
-    "q335_ngram_novelty",
-    "q336_cohort_ltv",
-    "q337_reprocess_planner",
-    "q339_multiclass_eval",
-    "q340_var_cvar",
-    "q341_power_mde",
-    "q342_isotonic_calibration",
-    "q343_funnel_significance",
-    "q344_lsh_s_curve",
-    "q345_matryoshka_eval",
-    "q346_dag_slack",
-    "q347_simpson_guard",
-    "q348_quantile_treatment_effect",
-    "q349_hotelling_t2",
-    "q350_theil_sen",
-    "q351_conformal_interval",
-    "q352_binary_segmentation",
-    "q353_rolling_origin",
-    "q354_randomized_response",
-    "q355_eb_shrinkage",
-    "q356_incremental_join",
-    "q357_mediation_analysis",
-    "q358_active_learning_batch",
-    "q359_spike_attribution",
-    "q360_link_prediction",
-    "q361_wilson_lower_bound",
-    "q362_randomization_test",
-    # latest driver row is r10
-    "q314_retry_storm_detector",
-    "q338_tier_migration",
-    "q363_mann_kendall",
-    "q364_fleiss_kappa",
-    "q365_covariate_balance",
-    "q366_successive_halving",
-    "q367_capture_recapture",
-    "q368_chao1_richness",
-    "q369_regression_discontinuity",
-    "q370_overdispersion",
-    "q372_event_study",
-    "q373_rmst",
-    "q374_seasonality_strength",
-    "q375_fractional_knapsack",
-    "q376_null_semantics",
-    "q377_state_size_advisor",
-    "q378_paired_ttest",
-    "q379_mcnemar",
-    "q380_bland_altman",
-    "q381_dup_cluster_histogram",
-    "q382_aging_buckets",
-    "q383_langid_eval",
-    "q384_tokenizer_fertility",
-    "q385_design_effect",
-    "q386_stratified_ate",
-    "q387_storage_tiering",
-    "q388_totals_reconciliation",
-    "q389_apdex",
-    "q390_jackknife_ratio",
-    "q391_candidate_transitivity",
-    "q392_dominant_period",
-    "q393_missingness_audit",
-    "q394_negative_binomial_fit",
-    "q395_prevalence_correction",
-    "q396_weighted_kappa",
-    "q397_profit_threshold",
-    "q398_carrying_cost",
-    "q399_sla_credits",
-    "q400_health_scorecard",
-    "q401_rank_aggregation",
-    "q403_effective_size",
-    "q404_preference_pairs",
-    "q405_degree_assortativity",
-    "q406_durbin_watson",
-    "q407_cochran_q",
-    "q408_kendall_tau",
-    "q409_partial_correlation",
-    "q410_star_components",
-    # latest driver row is r11
-    "q371_adversarial_validation",
-    "q402_elbow_wcss",
-    "q411_labelprop_components",
-    "q412_dedup_clusters_star",
-    "q413_hits_scores",
-    "q414_kcore_onion",
-    "q415_littles_law",
-    "q416_activity_selection",
-    "q417_brier_decomposition",
-    "q418_l_diversity",
-    "q419_holt_trend",
-    "q420_sql_range_frames",
-    "q421_neyman_allocation",
-    "q422_hodges_lehmann",
-    "q423_wilcoxon_signed_rank",
-    "q424_kde_epanechnikov",
-    "q425_fellegi_sunter",
-    "q426_min_cost_supplier",
-    "q427_good_turing",
-    "q428_weighted_intervals",
-    "q429_harmonic_centrality",
-    "q430_sql_recursive_cte",
-    "q431_median_decomposition",
-    "q432_locf_gapfill",
-    "q433_mmr_rerank",
-    "q434_streaming_countmin",
-    "q435_python_udtf",
-    "q436_variant_json",
-    "q437_markov_ltv",
-    "q438_selinger_join_order",
-    "q439_large_volume_customers",
-    "q440_cluster_safe_split",
-    "q441_mv_selection",
-    "q442_embedding_drift",
-    "q443_stockout_projection",
-    "q444_sql_group_by_all",
-    "q445_hash_chain_ledger",
-    "q446_sampled_join_estimate",
-    "q447_quota_topk",
-    "q448_luhn_check",
-    "q449_bh_fdr_sign_tests",
-    "q450_corpus_release_manifest",
-    "q451_mv_selection_fused",
-    "q452_markov_next_event_accuracy",
-    "q453_personalized_pagerank",
-    "q454_tolerance_dedup",
-    "q455_linkage_threshold_curve",
-    "q456_hash_uniformity_audit",
-    "q457_bm25_topk",
-    "q458_vocab_growth",
-]
-
-
-def _prioritized(d: dict) -> dict:
-    head = {k: d[k] for k in _DRIVER_PRIORITY if k in d}
-    return head | {k: v for k, v in d.items() if k not in head}
-
-
 def all_queries() -> dict[str, QueryFn]:
     _load_modules()
-    return _prioritized(_QUERIES)
+    return dict(_QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
     _load_modules()
-    return _prioritized(_ORACLES)
+    return dict(_ORACLES)
 
 
 _LOADED = False
@@ -563,10 +52,6 @@ def _load_modules() -> None:
     global _LOADED
     if _LOADED:
         return
-    # windows first: the r1 verify run was killed before reaching the last
-    # module, leaving q31-q40 with no oracle verdict; registration order is
-    # the driver's execution order, so front-load the family that has never
-    # been checked and keep the cheapest families early overall.
     from hoops_edge_database_etl_spark.queries import (  # noqa: F401
         windows,  # isort: skip
         core,

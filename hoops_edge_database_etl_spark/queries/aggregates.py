@@ -14,8 +14,6 @@ count — the native double accumulators would drift in the last ulp.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
@@ -7063,6 +7061,11 @@ def q449_bh_fdr_sign_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q459 keeps its per-flag rank window while the plan-statistics estimate
+# of the pruned fact scan stays at or below this many bytes.
+Q459_WINDOW_MAX_BYTES = 16 * 1024 * 1024
+
+
 @query(
     "q459_spearman_rank_corr",
     oracle="""
@@ -7140,9 +7143,8 @@ def q459_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scan (no job runs): ≤ 16 MB (sf0.1 estimates 4.1 MB, sf1
     53.3 MB) → per-flag window; above → bucketed two-pass cumsum
     over the (flag, price) DISTINCT-CELL table, which is bounded by
-    the price DOMAIN (~100k values × 3 flags) at every scale.
-    Override with $SPARK_GRAFT_Q459_WINDOW_MAX_BYTES. Both branches
-    sum the same exact integers in DECIMAL(38,0), so rho is
+    the price DOMAIN (~100k values × 3 flags) at every scale. Both
+    branches sum the same exact integers in DECIMAL(38,0), so rho is
     bit-identical (exact row parity verified at sf1; the oracle hash
     at sf0.01/0.001 covers the window branch, and
     test_q459_rangecum_branch_parity pins the cumsum branch against
@@ -7167,13 +7169,10 @@ def q459_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cv",
         (2 * F.coalesce(F.sum("cv").over(wq), F.lit(0)) + F.col("cv") + 1).alias("dx"),
     )
-    threshold = int(
-        os.environ.get("SPARK_GRAFT_Q459_WINDOW_MAX_BYTES", str(16 * 1024 * 1024))
-    )
     fact_bytes = int(
         str(li._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     )
-    if fact_bytes <= threshold:
+    if fact_bytes <= Q459_WINDOW_MAX_BYTES:
         m = _q459_window_moments(li, dxm)
     else:
         m = _q459_rangecum_moments(li, dxm)

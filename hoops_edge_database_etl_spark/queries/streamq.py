@@ -25,6 +25,27 @@ from hoops_edge_database_etl_spark.tables import load_stream
 DEC = "decimal(18,2)"
 
 
+def _drain(df: DataFrame, sink: str, mode: str = "complete") -> DataFrame:
+    """Run ``df`` as a bounded (availableNow) stream into the memory sink
+    ``sink`` and return the sink's final state as a batch DataFrame."""
+    ck = tempfile.mkdtemp(prefix=f"{sink}_ck_")
+    q = (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(sink)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        # a fresh run must never resume old offsets, and repeated driver
+        # invocations must not litter /tmp — the checkpoint is per-run
+        shutil.rmtree(ck, ignore_errors=True)
+    return df.sparkSession.table(sink)
+
+
 @query(
     "q71_streaming_rollup",
     oracle="""
@@ -59,23 +80,7 @@ def q71_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
     )
-    sink = "q71_streaming_rollup_sink"
-    ck = tempfile.mkdtemp(prefix="q71_ck_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        # a fresh run must never resume old offsets, and repeated driver
-        # invocations must not litter /tmp — the checkpoint is per-run
-        shutil.rmtree(ck, ignore_errors=True)
-    return spark.table(sink).select(
+    return _drain(agg, "q71_streaming_rollup_sink").select(
         F.col("w.start").cast("string").alias("window_start"),
         "event_type",
         "n_events",
@@ -111,21 +116,7 @@ def q95_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users")
     )
-    sink = "q95_streaming_dedup_sink"
-    ck = tempfile.mkdtemp(prefix="q95_ck_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-    return spark.table(sink).select("event_type", "n_users")
+    return _drain(agg, "q95_streaming_dedup_sink").select("event_type", "n_users")
 
 
 @query(
@@ -176,21 +167,7 @@ def q137_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("net_price"),
     )
-    sink = "q137_stream_stream_join_sink"
-    ck = tempfile.mkdtemp(prefix="q137_ck_")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-    return spark.table(sink)
+    return _drain(joined, "q137_stream_stream_join_sink", "append")
 
 
 SESSION_GAP = "30 minutes"
@@ -240,21 +217,7 @@ def q156_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     )
-    sink = "q156_session_window_sink"
-    ck = tempfile.mkdtemp(prefix="q156_ck_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-    return spark.table(sink).select(
+    return _drain(agg, "q156_session_window_sink").select(
         "user_id",
         F.col("w.start").cast("string").alias("session_start"),
         F.col("w.end").cast("string").alias("session_end"),
@@ -314,21 +277,7 @@ def q200_streaming_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
     latest = log.groupBy("k").agg(
         F.max(F.struct("seq", "op", "cents")).alias("last")
     )
-    sink = "q200_streaming_cdc_sink"
-    ck = tempfile.mkdtemp(prefix="q200_ck_")
-    q = (
-        latest.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-    final = spark.table(sink).select(
+    final = _drain(latest, "q200_streaming_cdc_sink").select(
         F.col("last.op").alias("op"), F.col("last.cents").alias("cents")
     )
     return final.agg(
@@ -398,21 +347,7 @@ def q293_streaming_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("fingerprint"),
         )
     )
-    sink = "q293_streaming_fingerprint_sink"
-    ck = tempfile.mkdtemp(prefix="q293_ck_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-    return spark.table(sink).select("split", "n_docs", "fingerprint")
+    return _drain(agg, "q293_streaming_fingerprint_sink").select("split", "n_docs", "fingerprint")
 
 
 from hoops_edge_database_etl_spark.queries import _ORACLES  # noqa: E402
@@ -463,21 +398,7 @@ def q434_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("jc.j").alias("j"), F.col("jc.col").alias("col"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    sink = "q434_streaming_countmin_sink"
-    ck = tempfile.mkdtemp(prefix="q434_ck_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-    sketch = spark.table(sink)
+    sketch = _drain(agg, "q434_streaming_countmin_sink")
 
     base = load(spark, sf_dir, "lineitem").select(F.col("l_suppkey").alias("key"))
     exact = base.groupBy("key").agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))

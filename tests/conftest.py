@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -16,18 +15,6 @@ sys.path.insert(0, os.path.join(REPO, "scripts"))  # the plan-audit detectors
 # sf0.01 mirrors the driver's t2 gate exactly; sf0.001 hid ordering
 # nondeterminism (duplicate keys only appear at 0.01).
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 @pytest.fixture(scope="session")
@@ -52,6 +39,8 @@ def registry_plans(spark):
 
 @pytest.fixture(scope="session")
 def duck():
+    from hoops_edge_database_etl_spark.tables import TABLES
+
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -61,21 +50,10 @@ def duck():
     con.close()
 
 
-def _norm(v):
-    """Normalize a cell for exact comparison (mirror of the driver's hash)."""
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # collapse -0.0 vs 0.0 and use repr for full precision
-        return repr(v + 0.0)
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v) if v is not None else None
-
-
 def compare_query(spark, duck, name: str, sf_dir: str = SF_DIR) -> None:
     """Run queries()[name] in Spark and its oracle in DuckDB; assert equal
     (row count, sorted column names, order-insensitive cell values)."""
+    from hoops_edge_database_etl_spark.oracle_contract import norm_cell
     from hoops_edge_database_etl_spark.queries import all_oracles, all_queries
 
     qfn = all_queries()[name]
@@ -83,14 +61,14 @@ def compare_query(spark, duck, name: str, sf_dir: str = SF_DIR) -> None:
 
     sdf = qfn(spark, sf_dir)
     s_cols = sorted(sdf.columns)
-    s_rows = [tuple(_norm(r[c]) for c in s_cols) for r in sdf.collect()]
+    s_rows = [tuple(norm_cell(r[c]) for c in s_cols) for r in sdf.collect()]
 
     res = duck.execute(sql)
     d_cols_raw = [d[0] for d in res.description]
     d_rows_raw = res.fetchall()
     order = sorted(range(len(d_cols_raw)), key=lambda i: d_cols_raw[i])
     d_cols = [d_cols_raw[i] for i in order]
-    d_rows = [tuple(_norm(row[i]) for i in order) for row in d_rows_raw]
+    d_rows = [tuple(norm_cell(row[i]) for i in order) for row in d_rows_raw]
 
     assert s_cols == d_cols, f"{name}: column mismatch spark={s_cols} duck={d_cols}"
     assert len(s_rows) == len(d_rows), (

@@ -137,3 +137,16 @@ def test_decimal38_columns_are_decimal_in_spark_too(registry_plans):
                 f"{name}.{col}: oracle is DECIMAL(38,0) but Spark side is "
                 f"{spark_types.get(col)} — the driver hasher will mismatch"
             )
+
+
+def test_norm_cell_contract():
+    """The one cell normalizer every oracle comparison uses: NaN stays
+    distinct from NULL (a NaN-vs-NULL pair must not read MATCH), -0.0
+    folds into 0.0, and booleans compare as "0"/"1"."""
+    from hoops_edge_database_etl_spark.oracle_contract import norm_cell
+
+    assert norm_cell(float("nan")) != norm_cell(None)
+    assert norm_cell(None) is None
+    assert norm_cell(-0.0) == norm_cell(0.0)
+    assert norm_cell(True) == "1"
+    assert norm_cell(False) == "0"

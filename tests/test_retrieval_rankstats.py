@@ -28,7 +28,9 @@ def test_q459_rangecum_branch_parity(spark, duck, monkeypatch):
     (threshold 0) and pins it against the same DuckDB oracle at sf0.01.
     Both branches sum identical exact integers in DECIMAL(38,0), so the
     comparison is exact, not approximate."""
-    monkeypatch.setenv("SPARK_GRAFT_Q459_WINDOW_MAX_BYTES", "0")
+    from hoops_edge_database_etl_spark.queries import aggregates
+
+    monkeypatch.setattr(aggregates, "Q459_WINDOW_MAX_BYTES", 0)
     compare_query(spark, duck, "q459_spearman_rank_corr")
 
 
