@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from hoops_edge_database_etl_spark.operators.fixpoint import unrolled
 from hoops_edge_database_etl_spark.queries import query
 from hoops_edge_database_etl_spark.session import local_frame
 from hoops_edge_database_etl_spark.tables import load
@@ -5585,10 +5586,12 @@ def q437_markov_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweeps bit-for-bit. The value vector is state-count-sized (5 here,
     millions for a real user-state model — still node-sized relative
     to the event log, the q117 broadcast argument); the only full-data
-    passes build P and r once. Property tests: v is monotone
-    nondecreasing in t (rewards are nonneg), bounded by r_max·Σγ^t,
-    and a numpy float replay agrees within fixed-point quantization
-    (12 sweeps × ≤ 2 units/sweep)."""
+    passes build P and r once, and they are checkpointed as the inputs
+    of one ``unrolled`` chain: the 12 sweeps are a single SQL statement
+    that Spark analyzes once, with no job per sweep. Property tests: v
+    is monotone nondecreasing in t (rewards are nonneg), bounded by
+    r_max·Σγ^t, and a numpy float replay agrees within fixed-point
+    quantization (12 sweeps × ≤ 2 units/sweep)."""
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     s = ev.select(
@@ -5608,29 +5611,20 @@ def q437_markov_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "r_c"
         )
     ).localCheckpoint(eager=True)
-    v = rew.select("state", F.lit(0).cast("long").alias("v"))
-    for _ in range(_LTV_T):
-        pv = (
-            p.join(v, p.dst == v.state)
-            .groupBy(F.col("src").alias("state"))
-            .agg(F.sum(F.col("p_fx") * F.col("v")).alias("pv"))
-        )
-        v = (
-            rew.join(pv, "state", "left")
-            .select(
-                "state",
-                (
-                    F.col("r_c")
-                    + F.expr(f"9 * coalesce(pv, 0) div {_LTV_SCALE} div 10")
-                ).cast("long").alias("v"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return rew.join(v, "state").select(
-        "state",
-        "r_c",
-        F.col("v").alias(f"ltv{_LTV_T}_c"),
-        (F.col("v").cast("double") / 100).alias(f"ltv{_LTV_T}_dollars"),
+    return unrolled(
+        "SELECT state, CAST(0 AS BIGINT) AS v FROM {rew}",
+        "SELECT rew.state,"
+        f" CAST(rew.r_c + 9 * COALESCE(pv.pv, 0) div {_LTV_SCALE} div 10 AS BIGINT) AS v"
+        " FROM {rew} rew LEFT JOIN ("
+        "  SELECT p.src AS state, SUM(p.p_fx * v.v) AS pv"
+        "  FROM {p} p JOIN {prev} v ON p.dst = v.state GROUP BY p.src"
+        " ) pv ON pv.state = rew.state",
+        _LTV_T,
+        f"SELECT rew.state, rew.r_c, v.v AS ltv{_LTV_T}_c,"
+        f" CAST(v.v AS DOUBLE) / 100 AS ltv{_LTV_T}_dollars"
+        " FROM {rew} rew JOIN {last} v ON v.state = rew.state",
+        p=p,
+        rew=rew,
     )
 
 
@@ -6886,10 +6880,10 @@ def q474_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweeps with ONE floor per sweep, so all five chains (base + four
     removals) replay bit-for-bit in the unrolled-CTE oracle. All
     scenarios fold into ONE scenario-tagged matrix (≤5·|states|²
-    rows), so the sweep loop runs once, not per channel; the only
-    event-log passes build the journey hops. Credit shares ship in
-    floor ppm of the total removal effect. Tests replay journeys and
-    sweeps in numpy-free Python, assert every removal strictly hurts
+    rows), so the ``unrolled`` sweep chain runs once, not per
+    channel; the only event-log passes build the journey hops. Credit
+    shares ship in floor ppm of the total removal effect. Tests replay
+    journeys and sweeps in numpy-free Python, assert every removal strictly hurts
     (removal_effect > 0 — every channel carries some converting
     traffic in this fixture), and cross-check the base chain's
     conversion against the EMPIRICAL fraction of converting users
@@ -6964,66 +6958,35 @@ def q474_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    v = cterm.select("removed", "state", F.lit(0).cast("long").alias("v"))
-    for _ in range(_ATTR_T):
-        pv = (
-            p.join(
-                v,
-                (p.removed == v.removed) & (p.dst == v.state),
-            )
-            .groupBy(p.removed.alias("removed"), p.src.alias("state"))
-            .agg(F.sum(F.col("p_fx") * F.col("v")).alias("pv"))
-        )
-        v = (
-            cterm.join(pv, ["removed", "state"], "left")
-            .select(
-                "removed",
-                "state",
-                F.expr(
-                    f"(coalesce(pv, 0) + c_fx * {_ATTR_SCALE}) div {_ATTR_SCALE}"
-                )
-                .cast("long")
-                .alias("v"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    conv = v.where(F.col("state") == "__start__").select(
-        "removed", F.col("v").alias("conv_fx")
-    )
-    base = conv.where(F.col("removed") == "base").select(
-        F.col("conv_fx").alias("base_conv_fx")
-    )
-    eff = (
-        conv.where(F.col("removed") != "base")
-        .crossJoin(F.broadcast(base))
-        .select(
-            F.col("removed").alias("channel"),
-            "base_conv_fx",
-            F.col("conv_fx").alias("removed_conv_fx"),
-            (F.col("base_conv_fx") - F.col("conv_fx")).alias(
-                "removal_effect_fx"
-            ),
-        )
-    )
     # share_ppm clamps negatives to 0 on BOTH sides of the division
     # (ADVICE r6): Spark's `div` truncates toward zero while DuckDB's
     # `//` floors, so the two agree only on non-negative operands —
     # removal effects are non-negative on any sane fixture, but the
     # parity must hold by construction, not by data accident. NULLIF
     # guards the all-zero denominator the same way in both engines.
-    tot = eff.agg(
-        F.sum(F.greatest(F.lit(0), F.col("removal_effect_fx")))
-        .cast("long")
-        .alias("tot_fx")
-    )
-    return eff.crossJoin(F.broadcast(tot)).select(
-        "channel",
-        "base_conv_fx",
-        "removed_conv_fx",
-        "removal_effect_fx",
-        F.expr("greatest(0L, removal_effect_fx) * 1000000 div nullif(tot_fx, 0)")
-        .cast("long")
-        .alias("share_ppm"),
+    # The base chain's conversion and the effect total are windows over
+    # the five scenario rows, so the chain is read once.
+    return unrolled(
+        "SELECT removed, state, CAST(0 AS BIGINT) AS v FROM {cterm}",
+        "SELECT ct.removed, ct.state,"
+        f" CAST((COALESCE(pv.pv, 0) + ct.c_fx * {_ATTR_SCALE}) div {_ATTR_SCALE}"
+        " AS BIGINT) AS v"
+        " FROM {cterm} ct LEFT JOIN ("
+        "  SELECT p.removed, p.src AS state, SUM(p.p_fx * v.v) AS pv"
+        "  FROM {p} p JOIN {prev} v ON p.removed = v.removed AND p.dst = v.state"
+        "  GROUP BY p.removed, p.src"
+        " ) pv ON pv.removed = ct.removed AND pv.state = ct.state",
+        _ATTR_T,
+        "SELECT channel, base_conv_fx, removed_conv_fx, removal_effect_fx,"
+        " CAST(GREATEST(0L, removal_effect_fx) * 1000000 div NULLIF(SUM("
+        "  GREATEST(0L, removal_effect_fx)) OVER (), 0) AS BIGINT) AS share_ppm"
+        " FROM (SELECT removed AS channel, base_conv_fx, v AS removed_conv_fx,"
+        "  base_conv_fx - v AS removal_effect_fx"
+        "  FROM (SELECT removed, v, MAX(IF(removed = 'base', v, NULL)) OVER ()"
+        "   AS base_conv_fx FROM {last} WHERE state = '__start__')"
+        "  WHERE removed <> 'base')",
+        p=p,
+        cterm=cterm,
     )
 
 

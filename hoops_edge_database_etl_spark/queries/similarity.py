@@ -22,6 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from hoops_edge_database_etl_spark.operators.fixpoint import unrolled
 from hoops_edge_database_etl_spark.queries import query
 from hoops_edge_database_etl_spark.tables import load
 
@@ -841,11 +842,13 @@ def q141_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-normalized by n so its magnitude — and every later bound — is
     data-size INDEPENDENT; (2) {k} matrix-vector sweeps run on the
     dim²-row Gram DataFrame (join on k, groupBy j — dims ≪ data, so
-    these are driver-cheap but stay distributed; localCheckpoint per
-    sweep truncates lineage, the q117 recipe), each renormalized to the
-    2²⁰ fixed-point scale with the floor∘double-divide that both
+    these are driver-cheap but stay distributed; all {k} are one
+    ``unrolled`` chain over the checkpointed Gram matrix, the q117
+    recipe), each renormalized by the ``MAX(ABS(w)) OVER ()`` window to
+    the 2²⁰ fixed-point scale with the floor∘double-divide that both
     engines round identically (see module comment — integer div
-    disagrees on signs across engines); (3) sign fixed by ΣV ≥ 0. The
+    disagrees on signs across engines); (3) sign fixed by ΣV ≥ 0 (a
+    ``SUM(v) OVER ()`` window in the final select). The
     oracle replays all {k} sweeps as unrolled CTEs — bit-identical.
     Uncentered PCA (top right-singular direction); centering would
     subtract the q103 label-free mean first — same shapes.
@@ -904,38 +907,16 @@ def q141_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    v = (
-        g.select("j")
-        .distinct()
-        .select("j", F.lit(PCA_S).cast("long").alias("v"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(PCA_SWEEPS):
-        w = (
-            g.join(v.select(F.col("j").alias("k"), "v"), "k")
-            .groupBy("j")
-            .agg(F.sum(F.col("gv") * F.col("v")).alias("w"))
-        )
-        m = w.agg(F.max(F.abs("w")).alias("m"))
-        v = (
-            w.crossJoin(F.broadcast(m))
-            .select(
-                "j",
-                F.floor(
-                    F.col("w").cast("double") * F.lit(float(PCA_S))
-                    / F.col("m").cast("double")
-                )
-                .cast("long")
-                .alias("v"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    sgn = v.agg(
-        F.when(F.sum("v") < 0, -1).otherwise(1).cast("long").alias("s")
-    )
-    return v.crossJoin(F.broadcast(sgn)).select(
-        F.col("j").cast("bigint").alias("dim"),
-        (F.col("v") * F.col("s")).cast("bigint").alias("v"),
+    return unrolled(
+        f"SELECT DISTINCT j, CAST({PCA_S} AS BIGINT) AS v FROM {{g}}",
+        "SELECT j, CAST(floor(CAST(w AS DOUBLE)"
+        f" * {float(PCA_S)!r}D / CAST(MAX(ABS(w)) OVER () AS DOUBLE)) AS BIGINT) AS v"
+        " FROM (SELECT g.j, SUM(g.gv * p.v) AS w"
+        "  FROM {g} g JOIN {prev} p ON p.j = g.k GROUP BY g.j)",
+        PCA_SWEEPS,
+        "SELECT CAST(j AS BIGINT) AS dim,"
+        " CAST(v * IF(SUM(v) OVER () < 0, -1, 1) AS BIGINT) AS v FROM {last}",
+        g=g,
     )
 
 

@@ -14,7 +14,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hoops_edge_database_etl_spark.operators.fixpoint import until_stable
+from hoops_edge_database_etl_spark.operators.fixpoint import unrolled, until_stable
 from hoops_edge_database_etl_spark.queries import query
 from hoops_edge_database_etl_spark.session import local_frame
 from hoops_edge_database_etl_spark.tables import load
@@ -531,50 +531,44 @@ def q117_pagerank_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 fixed-point, floor division at the per-edge contribution — the
     identical arithmetic q94 runs on its collected matrix, so BOTH share
     one oracle). The 10 sweeps are one SQL CTE chain that Spark analyzes
-    once (``_pagerank_sweeps``): the call checkpoints the edge matrix and
-    runs nothing else, and AQE runs the chain stage by stage at the
-    action. The rank vector is O(nodes), the only state carried between
-    sweeps. At 100 TB: edges shuffle once per sweep on dst, the rank side
-    is node-sized (broadcastable when nodes ≪ edges); dangling mass
-    handling matches q94 (every node here has out-edges by construction).
+    once (``_pagerank``, on ``fixpoint.unrolled``): the call checkpoints
+    the edge matrix and runs nothing else, and AQE runs the chain stage
+    by stage at the action. The rank vector is O(nodes), the only state
+    carried between sweeps. At 100 TB: edges shuffle once per sweep on
+    dst, the rank side is node-sized (broadcastable when nodes ≪
+    edges); dangling mass handling matches q94 (every node here has
+    out-edges by construction).
 
     q94 is the right plan when nodes fit on the driver (league-sized
     graphs); THIS is the plan when they don't. Same bits either way."""
-    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), "TRUE")
+    pr = _pagerank(_pr_edges(spark, sf_dir), "TRUE")
     return pr.select(
         F.col("node").alias("team_id"),
         (F.col("pr").cast("double") / _PR_SCALE).alias("pagerank"),
     )
 
 
-def _pagerank_sweeps(e: DataFrame, teleport: str) -> DataFrame:
-    """q94's sweeps as one SQL statement: (node, pr) after ``_PR_ITERS``
-    sweeps over the (src, dst, w) edges. ``teleport`` is SQL text over
-    ``node`` marking the restart set: the initial vector puts
-    ``_PR_SCALE`` units on it and each sweep adds the 15% restart mass to
-    it (``"TRUE"`` is uniform restart, q117).
-
-    The sweeps are unrolled into a CTE chain pr0 … pr10 and handed to
-    Spark as one statement, so the growing self-join is analyzed once,
-    not once per sweep; the lineage is the fixed 10 sweeps deep, and AQE
-    still runs it stage by stage. The edge matrix is the one checkpoint:
-    every sweep reads it."""
+def _pagerank(e: DataFrame, teleport: str) -> DataFrame:
+    """(node, pr) after ``_PR_ITERS`` of q94's sweeps over the (src, dst,
+    w) edges, run as one ``unrolled`` chain. ``teleport`` is SQL text
+    over ``node`` marking the restart set: the initial vector puts
+    ``_PR_SCALE`` units on it and each sweep adds the 15% restart mass
+    to it (``"TRUE"`` is uniform restart, q117). The edge matrix with
+    its out-weights is the one checkpoint: every sweep reads it."""
     od = e.groupBy("src").agg(F.sum("w").alias("outw"))
     ew = e.join(od, "src").localCheckpoint(eager=True)
     base = (15 * _PR_SCALE) // 100
-    ctes = [
-        f"pr0 AS (SELECT node, CAST(IF({teleport}, {_PR_SCALE}, 0) AS BIGINT) AS pr"
-        " FROM (SELECT DISTINCT src AS node FROM {ew}))"
-    ]
-    for k in range(1, _PR_ITERS + 1):
+    return unrolled(
+        f"SELECT node, CAST(IF({teleport}, {_PR_SCALE}, 0) AS BIGINT) AS pr"
+        " FROM (SELECT DISTINCT src AS node FROM {ew})",
         # ints >= 0, so div == floor
-        ctes.append(
-            f"pr{k} AS (SELECT node, IF({teleport}, {base}, 0) + flow AS pr FROM ("
-            " SELECT e.dst AS node, 85 * SUM(p.pr * e.w div e.outw) div 100 AS flow"
-            f" FROM {{ew}} e JOIN pr{k - 1} p ON e.src = p.node GROUP BY e.dst))"
-        )
-    sql = "WITH " + ",\n".join(ctes) + f"\nSELECT node, pr FROM pr{_PR_ITERS}"
-    return e.sparkSession.sql(sql, ew=ew)
+        f"SELECT node, IF({teleport}, {base}, 0) + flow AS pr FROM ("
+        " SELECT e.dst AS node, 85 * SUM(p.pr * e.w div e.outw) div 100 AS flow"
+        " FROM {ew} e JOIN {prev} p ON e.src = p.node GROUP BY e.dst)",
+        _PR_ITERS,
+        "SELECT node, pr FROM {last}",
+        ew=ew,
+    )
 
 
 @query(
@@ -1424,10 +1418,11 @@ def q413_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed point direction and keeps every sweep order-independent
     integer sums, so the DuckDB unrolled-CTE oracle replays all 8
     sweeps bit-for-bit). The rank vectors stay DataFrames end-to-end
-    (the q117 discipline): each sweep is edges⋈scores → groupBy SUM →
-    broadcast 1-row max → floor-div, localCheckpoint truncating lineage
-    per sweep. At 100 TB the edge list shuffles once per sweep on the
-    join key and the score side is node-sized (broadcastable); the
+    (the q117 discipline): each half-sweep is edges⋈scores → groupBy
+    SUM → floor-div by the ``MAX(raw) OVER ()`` window, and all 16
+    half-sweeps are one ``unrolled`` chain analyzed once. At 100 TB the
+    edge list shuffles once per sweep on the join key and the score
+    side is node-sized (broadcastable); the
     int64 headroom bound is orders·2^40 < 2^63 (good through ~sf1 —
     re-scale SCALE down one sweep earlier beyond that).  Property
     tests: scores in [0, 1] with max == 1 on both axes, and a planted
@@ -1449,49 +1444,31 @@ def q413_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hits_iterate(e: DataFrame, sweeps: int = _HITS_SWEEPS) -> DataFrame:
     """Run the fixed-sweep integer HITS iteration over a weighted edge
     DataFrame ``(src, dst, w)``; returns ``(node, hub, authority)``.
-    Factored out so property tests can plant synthetic graphs."""
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    Factored out so property tests can plant synthetic graphs.
+
+    The sweeps are one ``unrolled`` chain of alternating half-sweeps:
+    c0 is the initial hub vector, odd CTEs are authorities, even ones
+    hubs. Each reads its predecessor once and max-normalizes with
+    ``MAX(raw) OVER ()``. A node nothing reaches has no row, i.e. a zero
+    score: it adds nothing to the next sums and cannot raise a max. The
+    final select fills those zeros over the node set and pairs the last
+    hub CTE with the authority CTE before it."""
+    authority, hub = (
+        f"SELECT node, raw * {_HITS_SCALE} div MAX(raw) OVER () AS s FROM ("
+        f" SELECT e.{to} AS node, SUM(e.w * p.s) AS raw"
+        f" FROM {{e}} e JOIN {{prev}} p ON p.node = e.{frm} GROUP BY e.{to})"
+        for frm, to in (("src", "dst"), ("dst", "src"))
     )
-
-    def _sweep(scores: DataFrame, edge_from: str, edge_to: str, col: str) -> DataFrame:
-        raw = (
-            e.join(scores, e[edge_from] == scores.node)
-            .groupBy(F.col(edge_to).alias("node"))
-            .agg(F.sum(F.col("w") * F.col(col)).alias("v"))
-        )
-        full = nodes.join(raw, "node", "left").select(
-            "node", F.coalesce("v", F.lit(0)).cast("long").alias("raw")
-        )
-        mx = full.agg(F.max("raw").alias("mx"))
-        return (
-            full.crossJoin(F.broadcast(mx))
-            .select(
-                "node",
-                F.expr(f"raw * {_HITS_SCALE} div mx").alias(col),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    h = nodes.select("node", F.lit(_HITS_SCALE).cast("long").alias("h"))
-    for _ in range(sweeps):
-        a = _sweep(h.withColumnRenamed("h", "s"), "src", "dst", "s").withColumnRenamed(
-            "s", "a"
-        )
-        h = _sweep(a.withColumnRenamed("a", "s"), "dst", "src", "s").withColumnRenamed(
-            "s", "h"
-        )
-    return (
-        nodes.join(h, "node")
-        .join(a, "node")
-        .select(
-            "node",
-            (F.col("h").cast("double") / _HITS_SCALE).alias("hub"),
-            (F.col("a").cast("double") / _HITS_SCALE).alias("authority"),
-        )
+    return unrolled(
+        f"SELECT DISTINCT src AS node, CAST({_HITS_SCALE} AS BIGINT) AS s FROM {{e}}",
+        (authority, hub),
+        2 * sweeps,
+        f"SELECT n.node, CAST(COALESCE(h.s, 0) AS DOUBLE) / {_HITS_SCALE} AS hub,"
+        f" CAST(COALESCE(a.s, 0) AS DOUBLE) / {_HITS_SCALE} AS authority"
+        " FROM (SELECT src AS node FROM {e} UNION SELECT dst FROM {e}) n"
+        " LEFT JOIN {last} h ON h.node = n.node"
+        " LEFT JOIN {prev} a ON a.node = n.node",
+        e=e,
     )
 
 
@@ -1924,7 +1901,7 @@ def q453_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     stationary mass measures proximity TO the seed set — the
     recommendation / trust-propagation / local-community primitive
     (seed = the user's items, scores = what to recommend). It runs
-    q117's distributed sweeps (``_pagerank_sweeps``) with the seed set
+    q117's distributed sweeps (``_pagerank``) with the seed set
     as the teleport predicate (``node IN (0, 7)``), which gates both the
     init vector and the restart term; every bit of the fixed-point
     discipline carries over unchanged — int64 2^20 units, floor division
@@ -1934,7 +1911,7 @@ def q453_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     outrank the graph median, and zeroing the seed set zeroes every
     score (no teleport, no mass)."""
     teleport = f"node IN ({', '.join(str(s) for s in _PPR_SEEDS)})"
-    pr = _pagerank_sweeps(_pr_edges(spark, sf_dir), teleport)
+    pr = _pagerank(_pr_edges(spark, sf_dir), teleport)
     return pr.select(
         F.col("node").alias("team_id"),
         (F.col("pr").cast("double") / _PR_SCALE).alias("ppr"),

@@ -26,6 +26,7 @@ import glob
 import json
 import os
 import random
+import statistics
 import sys
 import time
 
@@ -33,6 +34,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from plan_fp import plan_fingerprint  # noqa: E402
+
+#: timed runs per side, alternating small and big; a row records each
+#: side's median (one run per side read a same-directory slope anywhere
+#: from 0.69 to 1.42)
+SOAK_REPS = 3
 
 # O(n^2)-by-contract queries: slope >> data ratio is the documented design.
 QUADRATIC = {
@@ -170,8 +176,11 @@ def main() -> None:
             spark.catalog.clearCache()
             run(name, small)
             run(name, big)
-            t_small = timed(name, small)
-            t_big = timed(name, big)
+            smalls, bigs = [], []
+            for _ in range(SOAK_REPS):
+                smalls.append(timed(name, small))
+                bigs.append(timed(name, big))
+            t_small, t_big = statistics.median(smalls), statistics.median(bigs)
             results[name] = {
                 "small_s": t_small,
                 "big_s": t_big,

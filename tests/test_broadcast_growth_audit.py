@@ -62,7 +62,6 @@ ALLOWED = {
     "q133_zorder_skipping": "bounded: 1 build side(s), max rows 1, max growth 1.0 at 10x",
     "q138_substring_decontaminate": "bounded: 1 build side(s), max rows 6, max growth 1.0 at 10x",
     "q140_winsorize": "bounded: 4 build side(s), max rows 5, max growth 1.0 at 10x",
-    "q141_pca_power_iteration": "bounded: 1 build side(s), max rows 1, max growth 1.0 at 10x",
     "q148_vocab_ids": "bounded: 2 build side(s), max rows 31, max growth 1.0 at 10x",
     "q149_bloom_block_skipping": "bounded: 3 build side(s), max rows 3, max growth 1.0 at 10x",
     "q150_events_endpoint": "bounded scalar branches (no growth measurable: zero-row exchange at sf0.001)",
@@ -188,7 +187,6 @@ ALLOWED = {
     "q471_shuffle_audit": "bounded: 2 build side(s), max rows 1, max growth 1.0 at 10x",
     "q472_risk_coverage": "bounded: 2 build side(s), max rows 5, max growth 1.0 at 10x",
     "q473_newsvendor": "bounded: 2 build side(s), max rows 1, max growth 1.0 at 10x",
-    "q474_markov_attribution": "bounded: 3 build side(s), max rows 1, max growth 1.0 at 10x",
     "q475_sketch_quantile_gate": "bounded: 4 build side(s), max rows 998, max growth 1.28 at 10x",
     "q476_join_view_maintenance": "bounded: 3 build side(s), max rows 1, max growth 1.0 at 10x",
     "q477_sequential_patterns": "bounded: 3 build side(s), max rows 5, max growth 1.0 at 10x",

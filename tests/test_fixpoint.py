@@ -64,3 +64,21 @@ def test_max_relax_raises_on_a_cycle(spark):
     nodes = edges.select(F.col("src").alias("node"))
     with pytest.raises(RuntimeError, match="did not converge"):
         _max_relax(edges, nodes)
+
+
+def test_unrolled_plan_grows_linearly_in_sweeps(spark):
+    """Spark inlines a CTE at every place that reads it, so a sweep that
+    read its predecessor twice would double the plan per sweep. HITS
+    through ``unrolled`` (a planted star, and a final select that reads
+    the last two CTEs) must add the same number of joins per sweep."""
+    from hoops_edge_database_etl_spark.queries.solver import hits_iterate
+
+    edges = [(0, t, 5) for t in range(1, 6)] + [(6, 7, 1)]
+    e = spark.createDataFrame(edges, "src: long, dst: long, w: long")
+
+    def joins(sweeps):
+        plan = hits_iterate(e, sweeps)._jdf.queryExecution().optimizedPlan()
+        return sum("Join " in ln for ln in plan.toString().splitlines())
+
+    j2, j4, j8 = joins(2), joins(4), joins(8)
+    assert 0 < j4 - j2 and j8 - j4 == 2 * (j4 - j2), (j2, j4, j8)

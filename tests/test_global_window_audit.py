@@ -47,6 +47,13 @@ ALLOWED = {
     "q460_kruskal_wallis": "50 rank-group rows (bounded by group spine)",
     "q471_shuffle_audit": "1 summary row",
     "q472_risk_coverage": "5 coverage bands",
+    # the unrolled fixed-count sweeps: a normalizer over the whole
+    # node-sized vector is a window so each step reads its predecessor
+    # once (operators/fixpoint.py)
+    "q141_pca_power_iteration": "64 embedding dims (MAX(ABS(w)) per sweep, "
+    "SUM(v) sign fix)",
+    "q413_hits_scores": "24 graph nodes (mod-24 ids; MAX(raw) per half-sweep)",
+    "q474_markov_attribution": "5 scenario rows (base + 4 removed channels)",
     "q273_codec_advisor": "P=32 per-partition boundary rows (the r10 fix's "
     "stitch pass — bounded by the partition count, never the corpus)",
     "q371_adversarial_validation": "n_chars histogram, 311->313 at 10x "

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from hoops_edge_database_etl_spark.operators.ratings import (
     Observation,
     barthag,
@@ -216,25 +218,43 @@ def test_pagerank_distributed_matches_collected(spark):
     assert a == b
 
 
-def test_pagerank_distributed_call_runs_no_job_per_sweep(spark, monkeypatch):
-    """Calling q117 (no action) runs only the edge checkpoint: the sweeps
-    are one statement that Spark analyzes once, so the jobs the call runs
-    do not depend on the sweep count."""
-    from hoops_edge_database_etl_spark.queries import solver
+#: fixed-count iterative query -> (queries module, its sweep-count constant)
+_UNROLLED = {
+    "q117_pagerank_distributed": ("solver", "_PR_ITERS"),
+    "q453_personalized_pagerank": ("solver", "_PR_ITERS"),
+    "q413_hits_scores": ("solver", "_HITS_SWEEPS"),
+    "q437_markov_ltv": ("events_analytics", "_LTV_T"),
+    "q474_markov_attribution": ("events_analytics", "_ATTR_T"),
+    "q141_pca_power_iteration": ("similarity", "PCA_SWEEPS"),
+}
+
+
+@pytest.mark.parametrize("name", list(_UNROLLED))
+def test_pagerank_distributed_call_runs_no_job_per_sweep(spark, monkeypatch, name):
+    """Calling a fixed-count iterative query (no action) runs only the
+    checkpoints of its inputs: the sweeps are one ``unrolled`` statement
+    that Spark analyzes once, so the jobs the call runs do not depend on
+    the sweep count."""
+    import importlib
+
     from tests.conftest import SF_DIR
 
+    module, sweeps = _UNROLLED[name]
+    mod = importlib.import_module(f"hoops_edge_database_etl_spark.queries.{module}")
     sc = spark.sparkContext
 
     def call_jobs(group):
-        sc.setJobGroup(group, "q117 call without an action")
+        sc.setJobGroup(group, f"{name} call without an action")
         try:
-            solver.q117_pagerank_distributed(spark, SF_DIR)
+            getattr(mod, name)(spark, SF_DIR)
             return len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setJobGroup("tests", "tests")
 
-    sweeps = solver._PR_ITERS
-    full = call_jobs("q117-call-all-sweeps")
-    monkeypatch.setattr(solver, "_PR_ITERS", 1)
-    one = call_jobs("q117-call-one-sweep")
-    assert full == one, f"the call ran {full} jobs for {sweeps} sweeps, {one} for one"
+    full_sweeps = getattr(mod, sweeps)
+    full = call_jobs(f"{name}-all-sweeps")
+    monkeypatch.setattr(mod, sweeps, 1)
+    one = call_jobs(f"{name}-one-sweep")
+    assert full == one, (
+        f"the call ran {full} jobs for {full_sweeps} sweeps, {one} for one"
+    )
